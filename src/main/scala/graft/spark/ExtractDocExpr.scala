@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -113,8 +113,14 @@ object ExtractDocExpr {
   @inline private def str(v: Any): String =
     if (v == null) null else v.toString
 
-  /** Register as a SQL-callable function (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_extract", exprs => ExtractDocExpr(exprs), "scala_udf")
+  /** Register as a SQL-callable function, once per session: replacing a
+    * registered function logs a warning, and the extract stage calls this
+    * for every plan it builds.
+    */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("graft_extract")))
+      registry.createOrReplaceTempFunction(
+        "graft_extract", exprs => ExtractDocExpr(exprs), "scala_udf")
+  }
 }

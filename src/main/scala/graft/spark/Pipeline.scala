@@ -3,6 +3,7 @@ package graft.spark
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.util.LongAccumulator
 
 import graft.core.{Dispatcher, Doc, ExtractedDoc, Span}
@@ -46,8 +47,9 @@ object Pipeline {
   /** Counter metrics AT SINK TIME via the Observation API (SURVEY A5,
     * reference writer.py:240-253 / run.py:102-117): per-format
     * extracted/errored counters are computed inside the SAME action that
-    * writes the output — no second pass over the data. Call
-    * [[metricsFrame]] with `obs.get` after the sink action completes.
+    * writes the output — no second pass over the data and no extra job.
+    * Call [[metricsFrame]] with `obs.get` after the sink action completes;
+    * [[runCommitted]] writes the same rows to its sidecar from the driver.
     */
   def observeMetrics(out: DataFrame): (DataFrame, Observation) = {
     val obs = Observation()
@@ -71,13 +73,64 @@ object Pipeline {
     */
   def metricsFrame(spark: SparkSession, m: Map[String, Any]): DataFrame = {
     import spark.implicits._
+    metricsRows(m).toDF("format", "n_extracted", "n_errored")
+  }
+
+  /** The rows of [[metricsFrame]]: (format, n_extracted, n_errored). */
+  private[spark] def metricsRows(m: Map[String, Any]): Seq[(String, Long, Long)] = {
     def cnt(k: String): Long =
       m.get(k).flatMap(Option(_)).map(_.asInstanceOf[Long]).getOrElse(0L)
     (ObservedFormats :+ "other").flatMap { f =>
       val x = cnt(s"x_$f"); val e = cnt(s"e_$f")
       if (x + e > 0) Some((f, x, e)) else None
-    }.toDF("format", "n_extracted", "n_errored")
+    }
   }
+
+  /** Schema of the `metrics/` sidecar of [[runCommitted]]: the
+    * [[metricsFrame]] columns plus the run's snapshot and run ids.
+    */
+  private[spark] val SidecarSchema: StructType = StructType(Seq(
+    StructField("format", StringType),
+    StructField("n_extracted", LongType, nullable = false),
+    StructField("n_errored", LongType, nullable = false),
+    StructField("snapshot_id", LongType, nullable = false),
+    StructField("run_id", StringType, nullable = false)))
+
+  /** Appends one run's sidecar rows to `dir` as a single parquet file,
+    * written on the driver (no Spark job) in the layout a Spark write of
+    * [[SidecarSchema]] produces: the same parquet schema and the same row
+    * metadata, so `spark.read.parquet(dir)` reads it beside Spark-written
+    * files. The file is written under a `_` name, which readers skip, and
+    * renamed into place. Writes nothing when there are no rows.
+    */
+  private def writeSidecar(spark: SparkSession, dir: String,
+      rows: Seq[(String, Long, Long)], snapshotId: Long, runId: String): Unit =
+    if (rows.nonEmpty) {
+      import org.apache.hadoop.fs.Path
+      import org.apache.parquet.example.data.simple.SimpleGroupFactory
+      import org.apache.parquet.hadoop.example.ExampleParquetWriter
+      import org.apache.parquet.hadoop.metadata.CompressionCodecName
+      import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
+      val conf = spark.sparkContext.hadoopConfiguration
+      val name = s"part-00000-${java.util.UUID.randomUUID()}-c000.snappy.parquet"
+      val (tmp, dest) = (new Path(dir, s"_$name"), new Path(dir, name))
+      val schema = new SparkToParquetSchemaConverter(spark.sessionState.conf).convert(SidecarSchema)
+      val writer = ExampleParquetWriter.builder(tmp).withConf(conf).withType(schema)
+        .withCompressionCodec(CompressionCodecName.SNAPPY)
+        .withExtraMetaData(java.util.Map.of(
+          SnapshotTable.SparkRowMetadataKey, SidecarSchema.json,
+          "org.apache.spark.version", org.apache.spark.SPARK_VERSION_SHORT))
+        .build()
+      val groups = new SimpleGroupFactory(schema)
+      try rows.foreach { case (format, extracted, errored) =>
+        writer.write(groups.newGroup()
+          .append("format", format).append("n_extracted", extracted)
+          .append("n_errored", errored).append("snapshot_id", snapshotId)
+          .append("run_id", runId))
+      } finally writer.close()
+      if (!tmp.getFileSystem(conf).rename(tmp, dest))
+        throw new java.io.IOException(s"metrics sidecar rename failed: $tmp -> $dest")
+    }
 
   /** Skew handling (SURVEY.md §4): documents above `budgetBytes` of raw text
     * are "mega docs" (the reference's dedicated PDF queue + slow-doc problem,
@@ -204,8 +257,16 @@ object Pipeline {
     * mid-write leaves stray data files no reader sees (SnapshotTable), so
     * rerunning this is exactly-once at table granularity — the Spark-native
     * equivalent of the reference's skip-if-written + temp-file-commit
-    * (adsft/writer.py:40-156). Returns the new snapshot id, or -1 when
-    * everything was already committed.
+    * (adsft/writer.py:40-156). Returns the new snapshot id, -1 when
+    * everything was already committed, or the current snapshot id when the
+    * checker dropped every remaining doc.
+    *
+    * One run is one Spark write job plus its broadcast builds and shuffle
+    * stages: reading the committed table infers no schema
+    * ([[SnapshotTable.read]]), whether anything was left to extract is an
+    * observed count on the same action rather than an emptiness pre-pass,
+    * and the `metrics/` sidecar (one row per format: [[SidecarSchema]]) is
+    * written from the driver after the pointer swap.
     */
   def runCommitted(spark: SparkSession, input: DataFrame, prevState: DataFrame,
       prevExtracted: Option[DataFrame], indexDate: java.sql.Timestamp,
@@ -219,17 +280,16 @@ object Pipeline {
       case Some(committed) => resume(input, committed.filter(col("error").isNull))
       case None => input
     }
-    if (todo.isEmpty) -1L
+    // the todo count and the counters ride the sink action itself (observe
+    // = zero extra passes); an empty todo commits zero rows, a no-op append
+    val todoObs = Observation()
+    val out = run(spark, todo.observe(todoObs, count(lit(1)).as("n")), prevState,
+      prevExtracted, indexDate, runId, numPartitions).toDF()
+    val (observed, obs) = observeMetrics(out)
+    val snapshotId = SnapshotTable.commit(observed, tableDir)
+    if (todoObs.get("n") == 0L) -1L
     else {
-      val out = run(spark, todo, prevState, prevExtracted, indexDate, runId, numPartitions).toDF()
-      // counters ride the sink action itself (observe = zero extra passes),
-      // then land as a queryable sidecar table keyed by snapshot
-      val (observed, obs) = observeMetrics(out)
-      val snapshotId = SnapshotTable.commit(observed, tableDir)
-      metricsFrame(spark, obs.get)
-        .withColumn("snapshot_id", lit(snapshotId))
-        .withColumn("run_id", lit(runId))
-        .write.mode("append").parquet(s"$tableDir/metrics")
+      writeSidecar(spark, s"$tableDir/metrics", metricsRows(obs.get), snapshotId, runId)
       snapshotId
     }
   }

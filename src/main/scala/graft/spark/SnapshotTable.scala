@@ -2,6 +2,7 @@ package graft.spark
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Iceberg-shaped table commit protocol: atomic snapshot commits over plain
   * parquet data files.
@@ -39,7 +40,10 @@ object SnapshotTable {
   private def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Append `df` as a new atomic snapshot. Returns the new snapshot id. */
+  /** Append `df` as a new atomic snapshot. Returns the new snapshot id, or
+    * the current one (-1 before the first commit) when `df` has no rows: a
+    * zero-row append creates no snapshot.
+    */
   def commit(df: DataFrame, tableDir: String): Long = append(df, tableDir, replace = false)
 
   /** Replace the table content with `df` (insert-overwrite semantics):
@@ -80,10 +84,13 @@ object SnapshotTable {
     val basePointer = baseOverride.getOrElse(currentPointerName(hfs, tableDir))
     val (prevId, prevEntries) = currentManifest(spark, tableDir)
       .map { case (id, es) => (id, es) }.getOrElse((-1L, Seq.empty))
-    // appending zero rows to an existing table is a no-op (no new snapshot):
-    // a rerun whose resume anti-join found nothing to add must not advance
-    // table history
-    if (!replace && prevId >= 0 && newStats.forall(_._2 == 0L)) return prevId
+    // appending zero rows is a no-op (no new snapshot, on a fresh table
+    // too): a rerun whose resume anti-join found nothing to add must not
+    // advance table history, nor leave a data directory only vacuum reclaims
+    if (!replace && newStats.forall(_._2 == 0L)) {
+      hfs.delete(dataDir, true)
+      return prevId
+    }
     val snapshotId = prevId + 1
     val newEntries = newStats.map { case (p, r, b) => FileEntry(p, r, b, snapshotId) }
     val entries = (if (replace) Seq.empty else prevEntries) ++ newEntries
@@ -220,12 +227,31 @@ object SnapshotTable {
 
   /** The committed view: only manifest-listed files. None before the first
     * commit. Stray data files from a crashed job are never read.
+    *
+    * Planning the scan launches no Spark job: the schema comes from one
+    * data file's footer, read on the driver ([[scan]]).
     */
   def read(spark: SparkSession, tableDir: String): Option[DataFrame] =
-    currentManifest(spark, tableDir).map { case (_, entries) =>
-      if (entries.isEmpty) spark.emptyDataFrame
-      else spark.read.parquet(entries.map(_.path): _*)
+    currentManifest(spark, tableDir).map { case (_, entries) => scan(spark, entries) }
+
+  /** The listed files as one DataFrame. The schema is the Spark row
+    * metadata in the first file's footer, so `spark.read` skips its
+    * schema-inference job. Every data file of a table is written by a Spark
+    * job, so a footer without that key is an error.
+    */
+  private def scan(spark: SparkSession, entries: Seq[FileEntry]): DataFrame =
+    if (entries.isEmpty) spark.emptyDataFrame
+    else {
+      val file = new Path(entries.head.path)
+      val json = withFooter(spark, file)(_.getFileMetaData.getKeyValueMetaData.get(SparkRowMetadataKey))
+      if (json == null) throw new java.io.IOException(
+        s"$file has no $SparkRowMetadataKey footer key; table data files are written by Spark")
+      spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType])
+        .parquet(entries.map(_.path): _*)
     }
+
+  /** The footer key under which Spark's parquet writer stores the row schema. */
+  private[spark] val SparkRowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** URI string -> path, scheme and authority dropped, ENCODING PRESERVED —
     * the COLUMN twin of the Scala-side `new Path(uri).toUri.getRawPath`
@@ -267,7 +293,7 @@ object SnapshotTable {
       else {
         import org.apache.spark.sql.functions._
         import spark.implicits._
-        val df = spark.read.parquet(entries.map(_.path): _*)
+        val df = scan(spark, entries)
         // getRawPath, NOT getPath: _metadata.file_path is URI-ENCODED
         // ("/a b" renders "/a%20b"), so the manifest side must stay encoded
         // too or a table path with a space/percent/non-ASCII char would
@@ -341,17 +367,16 @@ object SnapshotTable {
 
   /** Time travel: the table as of snapshot `snapshotId` — the view a
     * [[read]] at that commit returned. Metadata-only resolution (one
-    * manifest read); data files are immutable so the historical view is
-    * exact until [[vacuum]] reclaims it. None when the snapshot never
-    * existed or its manifest has been vacuumed.
+    * manifest read, one footer read, no Spark job); data files are
+    * immutable so the historical view is exact until [[vacuum]] reclaims
+    * it. None when the snapshot never existed or its manifest has been
+    * vacuumed.
     */
   def readAt(spark: SparkSession, tableDir: String, snapshotId: Long): Option[DataFrame] = {
     val hfs = fs(spark, tableDir)
     history(spark, tableDir).find(_._1 == snapshotId).map { case (_, name) =>
-      val entries = parseManifest(
-        readFile(hfs, new Path(s"$tableDir/manifests/$name")), snapshotId, name)
-      if (entries.isEmpty) spark.emptyDataFrame
-      else spark.read.parquet(entries.map(_.path): _*)
+      scan(spark, parseManifest(
+        readFile(hfs, new Path(s"$tableDir/manifests/$name")), snapshotId, name))
     }
   }
 
@@ -453,11 +478,15 @@ object SnapshotTable {
       }
     }
 
-  private def footerRowCount(spark: SparkSession, file: Path): Long = {
+  private def footerRowCount(spark: SparkSession, file: Path): Long =
+    withFooter(spark, file)(_.getRecordCount)
+
+  private def withFooter[T](spark: SparkSession, file: Path)(
+      f: org.apache.parquet.hadoop.ParquetFileReader => T): T = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile
       .fromPath(file, spark.sparkContext.hadoopConfiguration)
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try reader.getRecordCount finally reader.close()
+    try f(reader) finally reader.close()
   }
 
   private def writeFileAtomic(hfs: FileSystem, dest: Path, content: String): Unit = {

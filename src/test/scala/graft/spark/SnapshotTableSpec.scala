@@ -357,6 +357,121 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(Pipeline.runCommitted(spark, good, prev, None, ts, "m4", table, 2) == -1L)
   }
 
+  /** Docs 7 and 28 reach the extract stage; doc 28 in an unaccepted
+    * format becomes an error row (the planted inputs of the retry test).
+    */
+  private def twoDocs(broken: Boolean) = {
+    val good = SpanGen.docs(spark, dir).toDF()
+      .filter(col("doc_id").isin("D000000007", "D000000028"))
+    if (!broken) good
+    else good.withColumn("format",
+      when(col("doc_id") === "D000000028", lit("weird")).otherwise(col("format")))
+  }
+
+  test("a zero-row append creates no snapshot and leaves no data directory, on a fresh table too") {
+    import spark.implicits._
+    val table = tmpTable()
+    val empty = Seq.empty[(String, Int)].toDF("doc_id", "v")
+    def dataDirs = Option(new java.io.File(s"$table/data").list()).map(_.length).getOrElse(0)
+    assert(SnapshotTable.commit(empty, table) == -1L)
+    assert(SnapshotTable.read(spark, table).isEmpty && dataDirs == 0)
+    assert(SnapshotTable.commit(Seq(("a", 1)).toDF("doc_id", "v"), table) == 0L)
+    assert(SnapshotTable.commit(empty, table) == 0L)
+    assert(SnapshotTable.history(spark, table).map(_._1) == Seq(0L) && dataDirs == 1)
+    // an overwrite with zero rows still empties the table
+    assert(SnapshotTable.overwrite(empty, table) == 1L)
+    assert(SnapshotTable.read(spark, table).get.count() == 0)
+  }
+
+  test("runCommitted on empty input and a fresh table: -1, no pointer, snapshot or sidecar") {
+    val table = tmpTable()
+    val prev = SpanGen.prevState(spark, dir)
+    assert(Pipeline.runCommitted(spark, twoDocs(broken = false).filter(lit(false)), prev,
+      None, ts, "z1", table, 2) == -1L)
+    assert(!new java.io.File(s"$table/_current").exists())
+    assert(SnapshotTable.history(spark, table).isEmpty)
+    assert(!new java.io.File(s"$table/metrics").exists())
+    assert(Option(new java.io.File(s"$table/data").list()).forall(_.isEmpty))
+  }
+
+  test("a rerun against a committed table is one SQL execution and no job outside it") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val table = tmpTable()
+    val prev = SpanGen.prevState(spark, dir)
+    val input = twoDocs(broken = true)
+    assert(Pipeline.runCommitted(spark, input, prev, None, ts, "j1", table, 2) == 0L)
+    // the rerun retries doc 28: it reads the table, resumes, extracts and
+    // commits. A schema-inference job (SnapshotTable.read) runs outside any
+    // SQL execution; an emptiness pre-pass (todo.isEmpty) and a Spark-written
+    // sidecar would each be a root SQL execution of their own. A job group
+    // keeps work from other threads of the shared session out of the count.
+    val group = s"graft-jobcount-${java.util.UUID.randomUUID()}"
+    val executions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobsOutside = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == group) &&
+            props.forall(_.getProperty("spark.sql.execution.id") == null))
+          jobsOutside.incrementAndGet(): Unit
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) &&
+            s.rootExecutionId.forall(_ == s.executionId) =>
+          executions.add(s.description): Unit
+        case _ =>
+      }
+    }
+    org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "runCommitted rerun")
+    try {
+      assert(Pipeline.runCommitted(spark, input, prev, None, ts, "j2", table, 2) == 1L)
+      org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobsOutside.get == 0, "jobs outside any SQL execution")
+    assert(executions.size == 1, s"root SQL executions: $executions")
+  }
+
+  test("the driver-written metrics sidecar reads back beside a Spark-written one") {
+    import org.apache.spark.sql.Row
+    val table = tmpTable()
+    val prev = SpanGen.prevState(spark, dir)
+    assert(Pipeline.runCommitted(spark, twoDocs(broken = true), prev, None, ts, "new", table, 2) == 0L)
+    // a sidecar file as a Spark job wrote it for an older run
+    Pipeline.metricsFrame(spark, Map("x_pdf" -> 3L, "e_other" -> 1L))
+      .withColumn("snapshot_id", lit(7L))
+      .withColumn("run_id", lit("old"))
+      .coalesce(1).write.mode("append").parquet(s"$table/metrics")
+    val files = new java.io.File(s"$table/metrics").listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    assert(files.length == 2)
+    val byRun = files.map { f =>
+      val df = spark.read.parquet(f.getPath)
+      df.select("run_id").distinct().collect().map(_.getString(0)).toSeq -> (f, df.schema)
+    }.toMap
+    val Seq((driverFile, driverSchema), (sparkFile, sparkSchema)) = Seq(byRun(Seq("new")), byRun(Seq("old")))
+    assert(driverSchema == sparkSchema)
+    def footer(f: java.io.File) = {
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.getPath), spark.sparkContext.hadoopConfiguration))
+      try {
+        val meta = reader.getFileMetaData
+        (meta.getSchema, meta.getKeyValueMetaData.get(SnapshotTable.SparkRowMetadataKey))
+      } finally reader.close()
+    }
+    assert(footer(driverFile) == footer(sparkFile))
+    assert(footer(driverFile)._2 == Pipeline.SidecarSchema.json)
+    assert(spark.read.parquet(s"$table/metrics").collect().toSet == Set(
+      Row("html", 1L, 0L, 0L, "new"), Row("other", 0L, 1L, 0L, "new"),
+      Row("pdf", 3L, 0L, 7L, "old"), Row("other", 0L, 1L, 7L, "old")))
+  }
+
   test("readCurrent resolves same-snapshot duplicate keys deterministically") {
     import spark.implicits._
     val table = tmpTable()
