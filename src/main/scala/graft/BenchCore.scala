@@ -43,8 +43,8 @@ private[graft] object BenchCore {
       // SPARK_GRAFT_AQE_COALESCE=0). Earlier rounds pinned coalescing OFF
       // to hold a fixed 4-tasks/core granularity across scaling levels —
       // but the headline pipeline plans ZERO Exchange (bucketed-scan
-      // sort-merge join, see BenchExplain), so coalescing cannot touch the
-      // scaling measurement at any level. What it does change is the
+      // sort-merge join), so coalescing cannot touch the scaling
+      // measurement at any level. What it does change is the
       // 116-query profile, where tiny verification universes paid 128
       // scheduled tasks per shuffle stage (q114: 11,871 tasks for a
       // 180-doc batch); with AQE coalescing the task count derives from
@@ -55,13 +55,13 @@ private[graft] object BenchCore {
       .config("spark.sql.adaptive.coalescePartitions.enabled",
         sys.env.getOrElse("SPARK_GRAFT_AQE_COALESCE", "1") == "1")
       // let AQE apply the same size-adaptive coalescing UNDER a persisted
-      // subtree (bm25TopK's postings cache, unigramSurprisal's token
-      // counts): by default InMemoryRelation pins its plan's partitioning,
-      // so a cached aggregate holds the pre-AQE 4-x-cores shuffle width
-      // forever and every consumer pays those scheduled tasks. Same
-      // scale-adaptive rationale (and the same opt-out) as coalescing
-      // itself; the headline pipeline persists nothing, so the scaling
-      // measurement is untouched
+      // subtree (unigramSurprisal's token counts): by default
+      // InMemoryRelation pins its plan's partitioning, so a cached
+      // aggregate holds the pre-AQE 4-x-cores shuffle width forever and
+      // every consumer pays those scheduled tasks. Same scale-adaptive
+      // rationale (and the same opt-out) as coalescing itself; the
+      // headline pipeline persists nothing, so the scaling measurement is
+      // untouched
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         sys.env.getOrElse("SPARK_GRAFT_AQE_COALESCE", "1") == "1")
       .config("spark.sql.session.timeZone", "UTC")
@@ -157,6 +157,8 @@ private[graft] object BenchCore {
     * pushes down but prunes nothing because every bucket file is a single
     * row group. A same-layout small table pair decodes 1/100 of the bytes
     * while compiling the identical zero-exchange bucketed-join plan.
+    * `parts` is unused: the pipeline's parallelism is the scan's split
+    * count. It stays because the frozen [[Bench]] passes it.
     */
   def runPipelineOnce(spark: SparkSession, path: String, outPath: String,
       parts: Int, warm: Boolean = false): (Long, Double) = {
@@ -168,7 +170,7 @@ private[graft] object BenchCore {
     prev.queryExecution.analyzed
     val t0 = System.nanoTime()
     Pipeline.run(spark, input, prev, None,
-        java.sql.Timestamp.valueOf("2026-01-01 00:00:00"), "bench", parts)
+        java.sql.Timestamp.valueOf("2026-01-01 00:00:00"), "bench")
       .write.mode(SaveMode.Overwrite).parquet(outPath)
     val sec = (System.nanoTime() - t0) / 1e9
     (spark.read.parquet(outPath).count(), sec)

@@ -45,7 +45,7 @@ object Diagnose {
     }
 
     val out = Pipeline.run(spark, input, prev, None,
-      java.sql.Timestamp.valueOf("2026-01-01 00:00:00"), s"diagnose-$docId", 1).toDF()
+      java.sql.Timestamp.valueOf("2026-01-01 00:00:00"), s"diagnose-$docId").toDF()
       .collect().headOption
     out match {
       case None =>

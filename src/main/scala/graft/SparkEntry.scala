@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.ExtractedDoc
 import graft.gen.{SpanGen, Synth}
 import graft.ops.{Dedup, IndexBuild, Multimodal, Sampling, Similarity, Sketch, TextAnalysis, WebOps}
-import graft.spark.{Checker, CheckedDoc, Pipeline, TextFunctions}
+import graft.spark.{Checker, Pipeline, TextFunctions}
 
 /** Driver contract: every operator of SURVEY.md §2 surfaces here as a named
   * query, with an ANSI-SQL DuckDB oracle over the same parquet tables
@@ -145,14 +145,14 @@ object SparkEntry {
   // ------------------------------------------------------------ entry point
 
   /** Flagship: the full pipeline (checker join -> needs-update filter ->
-    * FORCE_TO_SEND recovery -> salted extraction) on the checker corpus.
+    * FORCE_TO_SEND recovery -> extraction) on the checker corpus.
     */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
     val input = SpanGen.checkerDocs(spark, dir).toDF()
     val prev = SpanGen.prevState(spark, dir)
     Pipeline.run(spark, input, prev, prevExtracted = None,
-      IndexDate, runId = "entry", numPartitions = 8).toDF()
+      IndexDate, runId = "entry").toDF()
   }
 
   // ---------------------------------------------------------------- queries
@@ -340,7 +340,7 @@ object SparkEntry {
     "q35_sink_metrics" -> ((s, dir) => {
       val input = SpanGen.checkerDocs(s, dir).toDF()
       val prev = SpanGen.prevState(s, dir)
-      val out = Pipeline.run(s, input, prev, None, IndexDate, "q35", numPartitions = 8).toDF()
+      val out = Pipeline.run(s, input, prev, None, IndexDate, "q35").toDF()
       val (observed, obs) = Pipeline.observeMetrics(out)
       val sink = java.nio.file.Files.createTempDirectory("graft-q35").toString
       observed.write.mode("overwrite").parquet(s"$sink/out")
@@ -350,7 +350,7 @@ object SparkEntry {
     "q30_pipeline_full" -> ((s, dir) => {
       val input = SpanGen.checkerDocs(s, dir).toDF()
       val prev = SpanGen.prevState(s, dir)
-      Pipeline.run(s, input, prev, None, IndexDate, "q30", numPartitions = 8).toDF()
+      Pipeline.run(s, input, prev, None, IndexDate, "q30").toDF()
         .select("doc_id", "update_reason", "fulltext", "error")
     }),
 

@@ -57,8 +57,8 @@ object HttpExtractor {
       translateFlag = true, normaliseFlag = true, trimFlag = true))
   }
 
-  /** Real network transport (JDK HttpClient). Unused in the sandbox (zero
-    * egress) — injected by a deployment that actually serves http docs.
+  /** Real network transport (JDK HttpClient): what [[Dispatcher.extract]]
+    * and so the Spark extract stage use for a payload-less http doc.
     */
   lazy val defaultTransport: Transport = {
     // one shared client per JVM (selector thread + connection pool reuse),

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 
 /** Inverted-index shard construction: term -> (document frequency, total
@@ -26,33 +26,6 @@ import org.apache.spark.sql.functions._
   * (`truncated = df > maxPostings`), never silent.
   */
 object IndexBuild {
-
-  /** Caches registered by this module (currently: each [[bm25TopK]] call's
-    * query-bounded tf frame). Weak refs: a frame the caller dropped and the
-    * GC collected needs no unpersist bookkeeping beyond the LRU store.
-    */
-  private val registeredCaches =
-    scala.collection.mutable.ListBuffer.empty[java.lang.ref.WeakReference[DataFrame]]
-
-  private def registerCache(df: DataFrame): DataFrame = synchronized {
-    registeredCaches += new java.lang.ref.WeakReference(df)
-    df
-  }
-
-  /** Unpersist every cache this module registered and forget them; returns
-    * how many live frames were actually unpersisted. A long-lived session
-    * issuing many [[bm25TopK]] queries should call this between batches of
-    * retrieval work (each call persists one small tf frame for the lifetime
-    * of the returned plan; without cleanup they accumulate in the LRU
-    * store). Safe at any time: unpersisting only degrades later re-actions
-    * of an already-returned plan to recomputation, never correctness.
-    */
-  def clearCaches(): Int = synchronized {
-    val live = registeredCaches.flatMap(r => Option(r.get))
-    live.foreach(_.unpersist(blocking = false))
-    registeredCaches.clear()
-    live.size
-  }
 
   /** [[PostingsAgg]] buffer: parallel primitive-long arrays whose live
     * prefix is `[0, n)` (capacity may exceed `n` — amortized doubling up
@@ -261,9 +234,10 @@ object IndexBuild {
     * Scale: per-doc query-term occurrences come from `filter(w, t -> t IN
     * query)` BEFORE the explode — only query-term hits leave the row, the
     * corpus token stream is never materialized. One groupBy(doc_id, term)
-    * with map-side partials, a broadcast join against the |query|-row df
-    * table, one groupBy(doc_id), and a TakeOrdered(k) — no corpus-wide
-    * sort. Corpus stats (N, L) are one separate two-scalar aggregate scan.
+    * with map-side partials, a window count over term for df (its input is
+    * the query-bounded tf rows), one groupBy(doc_id), and a TakeOrdered(k)
+    * — no corpus-wide sort. Corpus stats (N, L) are one separate two-scalar
+    * aggregate scan.
     * Int64 headroom: needs N*max(dl)*1000 < 2^63 (~4e8 docs at 2e4 tokens
     * each per index shard — shard the corpus above that).
     */
@@ -279,21 +253,14 @@ object IndexBuild {
     val n = statsRow.getLong(0)
     val l = if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1)
     require(l > 0, "bm25TopK: corpus has no tokens")
-    // tf is bounded by (matching docs x |query|), NOT corpus-sized, and both
-    // the df model and the scoring read it — persist so the df subtree does
-    // not re-scan and re-aggregate the corpus (the plan audit showed the
-    // unpersisted dfs branch recomputing the whole explode+agg as a third
-    // parquet scan). The cache stays registered because tf is part of the
-    // RETURNED plan (default MEMORY_AND_DISK, small, LRU-evictable); it is
-    // tracked in [[registeredCaches]] so long-lived sessions can release
-    // every bm25 cache at once via [[IndexBuild.clearCaches]]
-    val tf = registerCache(withDl
+    // tf is bounded by (matching docs x |query|), NOT corpus-sized; df is a
+    // count over the same rows, so a window over term computes it in this
+    // plan: one scan of the corpus, nothing cached
+    withDl
       .select(col("doc_id"), col("dl").cast("long").as("dl"),
         explode(col("qw")).as("term"))
       .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
-      .persist())
-    val dfs = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    tf.join(broadcast(dfs), "term")
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("term")))
       .withColumn("idf_bits",
         (length(bin(lit(n))) - length(bin(col("df")))).cast("long"))
       .withColumn("r_c1000", expr(s"dl * ${n}L * 1000L div ${l}L"))

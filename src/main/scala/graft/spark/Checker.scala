@@ -26,7 +26,7 @@ object Checker {
     when(sourcePath.contains("http://") || sourcePath.contains("https://"), "http")
       .otherwise(lower(regexp_extract(sourcePath, "\\.([^./]+)$", 1)))
 
-  /** total raw text bytes carried by a doc (zero-byte guard + skew cost). */
+  /** total raw text bytes carried by a doc (the zero-byte guard). */
   def spanCost(spans: Column): Column =
     coalesce(aggregate(spans, lit(0L), (acc, s) =>
       acc + coalesce(length(s.getField("text")).cast("long"), lit(0L))), lit(0L))

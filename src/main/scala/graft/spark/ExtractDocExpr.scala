@@ -12,7 +12,7 @@ import graft.core.{Dispatcher, Doc, Span}
 /** Native Catalyst expression running the whole per-document extraction
   * directly over Catalyst's internal representation.
   *
-  * WHY: the typed `mapPartitions` path pays the generic object encoder both
+  * WHY: a typed `mapPartitions` stage pays the generic object encoder both
   * ways (MapObjects deserialization of `array<struct>` into Seq[Span], then
   * serialization of the result) — measured at ~10x the cost of extraction
   * itself. This expression reads the span structs straight from `ArrayData`,
@@ -23,7 +23,9 @@ import graft.core.{Dispatcher, Doc, Span}
   * noise next to a document parse).
   *
   * children: doc_id (string), format (string), provider (string),
-  *           spans (array<struct<kind,text,media_ref,offset>>)
+  *           spans (array<struct<kind,text,media_ref,offset>>),
+  *           source_path (string; the URL a payload-less `http` doc is
+  *           fetched from)
   */
 case class ExtractDocExpr(children: Seq[Expression])
     extends Expression with CodegenFallback {
@@ -37,6 +39,7 @@ case class ExtractDocExpr(children: Seq[Expression])
     val format = ExtractDocExpr.str(children(1).eval(input))
     val provider = ExtractDocExpr.str(children(2).eval(input))
     val spansRaw = children(3).eval(input)
+    val sourcePath = ExtractDocExpr.str(children(4).eval(input))
 
     val spans: Seq[Span] =
       if (spansRaw == null) Seq.empty
@@ -60,7 +63,7 @@ case class ExtractDocExpr(children: Seq[Expression])
         scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
       }
 
-    val doc = Doc(docId, format, provider, null, spans, null, null)
+    val doc = Doc(docId, format, provider, sourcePath, spans, null, null)
     Dispatcher.extract(doc) match {
       case Right(r) =>
         val spanRows = new Array[Any](r.spans.length)
@@ -113,6 +116,13 @@ object ExtractDocExpr {
   @inline private def str(v: Any): String =
     if (v == null) null else v.toString
 
+  /** The SQL builder of `graft_extract`, shared by [[register]] and
+    * [[GraftExtensions]]: a wrong arity is an AnalysisException at analysis
+    * time, not an IndexOutOfBoundsException in a task.
+    */
+  private[spark] def build(exprs: Seq[Expression]): Expression =
+    TextFunctions.nary("graft_extract", 5, exprs)(ExtractDocExpr(_))
+
   /** Register as a SQL-callable function, once per session: replacing a
     * registered function logs a warning, and the extract stage calls this
     * for every plan it builds.
@@ -120,7 +130,6 @@ object ExtractDocExpr {
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     if (!registry.functionExists(FunctionIdentifier("graft_extract")))
-      registry.createOrReplaceTempFunction(
-        "graft_extract", exprs => ExtractDocExpr(exprs), "scala_udf")
+      registry.createOrReplaceTempFunction("graft_extract", build, "scala_udf")
   }
 }

@@ -1,42 +1,22 @@
 package graft.spark
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import org.apache.spark.util.LongAccumulator
 
-import graft.core.{Dispatcher, Doc, ExtractedDoc, Span}
-
-/** A checked document entering the extract stage. */
-final case class CheckedDoc(
-    doc_id: String,
-    format: String,
-    provider: String,
-    source_path: String,
-    spans: Seq[Span],
-    update_flag: String,
-    src_mtime: java.sql.Timestamp,
-    update_reason: String,
-    route: String
-)
+import graft.core.ExtractedDoc
 
 /** The extraction pipeline (reference lifecycle run.py -> checker -> extract
   * -> write, SURVEY.md §3.1), as one logical Spark plan:
   *
-  *   read -> [checker join] -> filter -> [skew-salted repartition]
-  *        -> mapPartitions(dispatch+extract) -> sink (+ lineage, metrics)
+  *   read -> [checker join] -> filter -> graft_extract -> sink (+ lineage, metrics)
   *
-  * Two shuffles total: the state join and the salted repartition. Extraction
-  * itself is narrow, iterator-based, and never materializes a partition.
+  * Shuffles come only from the joins (the checker state join, plus the
+  * resume and FORCE_TO_SEND recovery joins when used; none when both sides
+  * are bucketed on doc_id). Extraction is a native Catalyst expression
+  * evaluated in place: narrow, row-at-a-time, never a materialized partition.
   */
 object Pipeline {
-
-  final case class Metrics(extracted: LongAccumulator, errors: LongAccumulator)
-
-  def newMetrics(spark: SparkSession): Metrics = Metrics(
-    spark.sparkContext.longAccumulator("graft.docs_extracted"),
-    spark.sparkContext.longAccumulator("graft.docs_errored"))
 
   /** The accepted-format universe (reference ACCEPTED_FORMATS,
     * adsft/extraction.py:1207) — the counter dimensions of the metrics table.
@@ -132,101 +112,20 @@ object Pipeline {
         throw new java.io.IOException(s"metrics sidecar rename failed: $tmp -> $dest")
     }
 
-  /** Skew handling (SURVEY.md §4): documents above `budgetBytes` of raw text
-    * are "mega docs" (the reference's dedicated PDF queue + slow-doc problem,
-    * checker.py:266-277). A document is the unit of work and cannot be split
-    * across tasks, so the mitigation is placement: heavy docs are hashed over
-    * their own partition range so no partition receives both a mega doc and a
-    * full share of normal docs. AQE rebalances the residue.
-    */
-  def saltByCost(df: DataFrame, numPartitions: Int, budgetBytes: Long): DataFrame = {
-    val cost = Checker.spanCost(col("spans"))
-    val heavy = df.filter(cost > budgetBytes)
-    val normal = df.filter(cost <= budgetBytes)
-    normal.repartition(numPartitions, col("doc_id"))
-      .unionAll(heavy.repartition(numPartitions, col("doc_id")))
-  }
-
-  /** Adaptive variant: parquet/Iceberg scans split by BYTES, and extraction
-    * cost is proportional to bytes, so a scan-fed pipeline is already
-    * cost-balanced — shuffling every payload through a full repartition
-    * would only move ~all input bytes to gain nothing. Here only the heavy
-    * tail shuffles (isolated onto the doc_id hash range) while normal docs
-    * stay narrow in their scan partitions. Use [[saltByCost]] after KEYED
-    * shuffles (count-balanced, not byte-balanced) where placement of every
-    * row matters.
-    *
-    * COST CAVEAT: both salt operators are a union of two filters over the
-    * same child, and with no Exchange boundary in the child there is nothing
-    * for ReuseExchange to deduplicate — the child plan (scan, and in
-    * [[run]]'s case the whole checker join) EXECUTES TWICE. That is the
-    * right trade only when heavy rows exist and their placement dominates;
-    * when the input is a byte-split scan (every task already holds ≤
-    * maxPartitionBytes of payload, so per-task cost is bounded by
-    * construction), it buys nothing — which is why [[run]] defaults to
-    * `salt = "none"`.
-    */
-  def saltHeavyOnly(df: DataFrame, numPartitions: Int, budgetBytes: Long): DataFrame = {
-    val cost = Checker.spanCost(col("spans"))
-    val heavy = df.filter(cost > budgetBytes)
-    val normal = df.filter(cost <= budgetBytes)
-    normal.unionAll(heavy.repartition(numPartitions, col("doc_id")))
-  }
-
-  /** The extract stage: per-row dispatch inside mapPartitions over
-    * Catalyst-encoded case classes (no RDD surface). Errors become rows in
+  /** The extract stage: the [[ExtractDocExpr]] Catalyst expression runs
+    * extraction without leaving Tungsten row format (no object encoder on
+    * either side). Output schema matches ExtractedDoc. Errors become rows in
     * the error side-channel (`error` column non-null) rather than task
     * failures — the reference's error-handler-queue semantics
-    * (docs/Overview.md:173-175).
-    *
-    * `grobid`: deployments with a Grobid service route `pdf-grobid` docs
-    * through the external call HERE, in the typed iterator stage — blocking
-    * remote IO belongs in mapPartitions tasks (retryable, per-row error
-    * isolation), never inside the codegen'd native expression, which is why
-    * [[extractStageNative]] stays grobid-free (its pdf-grobid rows become
-    * error rows, the reference's own disabled default).
-    */
-  def extractStage(ds: Dataset[CheckedDoc], indexDate: java.sql.Timestamp,
-      runId: String, metrics: Option[Metrics] = None,
-      grobid: Option[Dispatcher.GrobidConfig] = None): Dataset[ExtractedDoc] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      val partId = TaskContext.getPartitionId()
-      it.map { cd =>
-        // lineage is a pure function of (runId, doc_id): stable under task
-        // retry, AQE re-planning, and repartitioning — a counter-based id
-        // (monotonically_increasing_id or a partition-local seq) can assign
-        // the same logical row a different id on retry. part_id (below)
-        // records physical placement separately.
-        val lineage = s"$runId/${cd.doc_id}"
-        val doc = Doc(cd.doc_id, cd.format, cd.provider, cd.source_path,
-          Option(cd.spans).getOrElse(Seq.empty), cd.update_flag, cd.src_mtime)
-        Dispatcher.extract(doc, graft.core.HttpExtractor.defaultTransport, grobid) match {
-          case Right(r) =>
-            metrics.foreach(_.extracted.add(1))
-            ExtractedDoc(cd.doc_id, r.spans, r.fulltext, r.acknowledgements,
-              r.dataset, r.facility, cd.update_reason, indexDate, cd.format,
-              partId, lineage, null)
-          case Left(err) =>
-            metrics.foreach(_.errors.add(1))
-            ExtractedDoc(cd.doc_id, Seq.empty, null, null, Seq.empty, Seq.empty,
-              cd.update_reason, indexDate, cd.format, partId, lineage, err)
-        }
-      }
-    }
-  }
-
-  /** Native extract stage: the [[ExtractDocExpr]] Catalyst expression runs
-    * extraction without leaving Tungsten row format (no object encoder on
-    * either side) — measured ~4x the row throughput of the typed
-    * mapPartitions stage on the synthetic corpus. Output schema matches
-    * ExtractedDoc. Prefer this in the batch pipeline; the typed stage
-    * remains for API-level use and as a semantics cross-check in tests.
+    * (docs/Overview.md:173-175). `df` needs the columns doc_id, format,
+    * provider, source_path (the URL a payload-less `http` doc is fetched
+    * from), spans and update_reason. `pdf-grobid` rows become error rows,
+    * the reference's own disabled-Grobid default (config.py:8).
     */
   def extractStageNative(df: DataFrame, indexDate: java.sql.Timestamp,
       runId: String): DataFrame = {
     ExtractDocExpr.register(df.sparkSession)
-    df.withColumn("_ex", expr("graft_extract(doc_id, format, provider, spans)"))
+    df.withColumn("_ex", expr("graft_extract(doc_id, format, provider, spans, source_path)"))
       .select(
         col("doc_id"),
         col("_ex.spans").as("spans"),
@@ -238,8 +137,11 @@ object Pipeline {
         lit(indexDate).as("index_date"),
         col("format"),
         spark_partition_id().as("part_id"),
-        // deterministic lineage (see extractStage): function of the row key,
-        // not of physical placement or evaluation order
+        // lineage is a pure function of (runId, doc_id): stable under task
+        // retry, AQE re-planning, and repartitioning — a counter-based id
+        // (monotonically_increasing_id or a partition-local seq) can assign
+        // the same logical row a different id on retry. part_id (above)
+        // records physical placement separately.
         concat_ws("/", lit(runId), col("doc_id")).as("lineage"),
         col("_ex.error").as("error"))
   }
@@ -270,7 +172,7 @@ object Pipeline {
     */
   def runCommitted(spark: SparkSession, input: DataFrame, prevState: DataFrame,
       prevExtracted: Option[DataFrame], indexDate: java.sql.Timestamp,
-      runId: String, tableDir: String, numPartitions: Int = 32): Long = {
+      runId: String, tableDir: String): Long = {
     val todo = SnapshotTable.read(spark, tableDir) match {
       // only SUCCESSFULLY extracted rows count as done: the reference's
       // skip-if-written protocol skips written fulltext only
@@ -284,7 +186,7 @@ object Pipeline {
     // = zero extra passes); an empty todo commits zero rows, a no-op append
     val todoObs = Observation()
     val out = run(spark, todo.observe(todoObs, count(lit(1)).as("n")), prevState,
-      prevExtracted, indexDate, runId, numPartitions).toDF()
+      prevExtracted, indexDate, runId).toDF()
     val (observed, obs) = observeMetrics(out)
     val snapshotId = SnapshotTable.commit(observed, tableDir)
     if (todoObs.get("n") == 0L) -1L
@@ -333,26 +235,14 @@ object Pipeline {
     * recovery (adsft/extraction.py:1212-1220): recovered rows are passed
     * through without re-extraction when prior fulltext exists.
     *
-    * `salt` picks the skew strategy for the extract stage:
-    *   - "none" (default): no re-shuffle. The input is a byte-split scan
-    *     (parquet/Iceberg tasks hold ≤ maxPartitionBytes of payload; a row
-    *     too large to share a split gets a task to itself) and extraction
-    *     cost is ~linear in payload bytes, so per-task cost is bounded by
-    *     the scan itself — re-shuffling would move every payload byte to
-    *     improve nothing, and the union-of-filters salt operators execute
-    *     the scan+join subtree twice (see [[saltHeavyOnly]]'s cost caveat).
-    *   - "heavy": isolate docs above `budgetBytes` onto their own hash
-    *     range ([[saltHeavyOnly]]) — for inputs whose SPLITS are count-
-    *     balanced rather than byte-balanced (e.g. a row-limit-split source).
-    *   - "all": full cost-based repartition ([[saltByCost]]) — after keyed
-    *     shuffles where every row's placement matters.
+    * No re-shuffle before the extract stage: the input is a byte-split scan
+    * (parquet tasks hold at most maxPartitionBytes of payload; a row too
+    * large to share a split gets a task to itself) and extraction cost is
+    * about linear in payload bytes, so the scan already bounds per-task cost.
     */
   def run(spark: SparkSession, input: DataFrame, prevState: DataFrame,
       prevExtracted: Option[DataFrame], indexDate: java.sql.Timestamp,
-      runId: String, numPartitions: Int = 32,
-      budgetBytes: Long = 4L << 20,
-      metrics: Option[Metrics] = None,
-      salt: String = "none"): Dataset[ExtractedDoc] = {
+      runId: String): Dataset[ExtractedDoc] = {
     import spark.implicits._
 
     val checked = Checker.filterNeedsUpdate(Checker.classify(input, prevState))
@@ -377,15 +267,7 @@ object Pipeline {
       case None => (checked, None)
     }
 
-    val salted = salt match {
-      case "all" => saltByCost(toExtract, numPartitions, budgetBytes)
-      case "heavy" => saltHeavyOnly(toExtract, numPartitions, budgetBytes)
-      case "none" => toExtract
-      // a typo ("Heavy", "heav") must not silently disable skew handling
-      case other => throw new IllegalArgumentException(
-        s"""unknown salt strategy "$other": expected "none", "heavy" or "all"""")
-    }
-    val extracted = extractStageNative(salted, indexDate, runId).as[ExtractedDoc]
+    val extracted = extractStageNative(toExtract, indexDate, runId).as[ExtractedDoc]
     recovered.map(extracted.unionAll).getOrElse(extracted)
   }
 }

@@ -29,7 +29,7 @@ object StreamingPipeline {
     */
   def run(spark: SparkSession, inputDir: String, outDir: String,
       checkpointDir: String, prevState: DataFrame,
-      indexDate: java.sql.Timestamp, numPartitions: Int = 32,
+      indexDate: java.sql.Timestamp,
       trigger: Trigger = Trigger.AvailableNow(),
       maxFilesPerTrigger: Option[Int] = None,
       dedupWithin: Option[String] = None,
@@ -66,7 +66,7 @@ object StreamingPipeline {
         // output instead of appending duplicates (a bare mode("append") here
         // is only at-least-once). Readers see a batch=<id> partition column.
         Pipeline.run(batch.sparkSession, batch, prevState, None,
-            indexDate, runId = s"stream-$batchId", numPartitions = numPartitions)
+            indexDate, runId = s"stream-$batchId")
           .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
       }
       .start()
@@ -90,7 +90,6 @@ object StreamingPipeline {
       checkpointDir: String, prevState: DataFrame,
       indexDate: java.sql.Timestamp,
       incompleteTimeoutMs: Option[Long] = None,
-      numPartitions: Int = 32,
       trigger: Trigger = Trigger.AvailableNow(),
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
     import org.apache.spark.sql.functions._
@@ -124,7 +123,7 @@ object StreamingPipeline {
             .select("doc_id", "format", "provider", "source_path", "spans",
               "update_flag", "src_mtime")
           val out = Pipeline.run(s, complete, prevState, None, indexDate,
-            runId = s"parts-$batchId", numPartitions = numPartitions).toDF()
+            runId = s"parts-$batchId").toDF()
           // incomplete (timeout-flushed) docs: error rows, ExtractedDoc-shaped
           val incomplete = docs.filter(!col("complete")).select(
             col("doc_id"),

@@ -415,7 +415,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         TextFunctions.unary("convert_entities", exprs)(ConvertEntitiesExpr)))
     ext.injectFunction((FunctionIdentifier("graft_extract"),
       new ExpressionInfo(classOf[ExtractDocExpr].getName, "graft_extract"),
-      (exprs: Seq[Expression]) => ExtractDocExpr(exprs)))
+      ExtractDocExpr.build _))
     ext.injectFunction((FunctionIdentifier("cosine_sim"),
       new ExpressionInfo(classOf[CosineSimExpr].getName, "cosine_sim"),
       (exprs: Seq[Expression]) => TextFunctions.nary("cosine_sim", 2, exprs)(

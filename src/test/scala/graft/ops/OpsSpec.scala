@@ -94,18 +94,16 @@ class OpsSpec extends AnyFunSuite {
     assert(out == Seq((4L, 4632L, 2L), (1L, 1534L, 1L), (2L, 758L, 1L)))
   }
 
-  test("bm25TopK: clearCaches releases each call's tf cache (no lingering cached relation)") {
+  test("bm25TopK: one plan over docs, nothing cached") {
     import spark.implicits._
-    IndexBuild.clearCaches() // drain registrations from earlier tests
     val docs = Seq((1L, "dup aa"), (2L, "dup bb"), (3L, "cc"))
       .toDF("doc_id", "text")
-    val r1 = IndexBuild.bm25TopK(docs, Seq("dup"), k = 5)
-    val r2 = IndexBuild.bm25TopK(docs, Seq("cc"), k = 5)
-    assert(r1.count() == 2 && r2.count() == 1) // actions populate both caches
-    assert(IndexBuild.clearCaches() == 2)      // both live tf frames released
-    assert(IndexBuild.clearCaches() == 0)      // idempotent: registry drained
-    // released plans still recompute correctly without the cache
-    assert(r1.as[(Long, Long, Long)].collect().map(_._1).toSet == Set(1L, 2L))
+    val plan = IndexBuild.bm25TopK(docs, Seq("dup"), k = 5).queryExecution.optimizedPlan
+    assert(plan.collectFirst {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+    }.isEmpty, plan)
+    // df comes from the same rows as tf, not from a second scan of docs
+    assert(plan.collectLeaves().size == 1, plan)
   }
 
   test("cosine kernel and brute-force knn ranking") {

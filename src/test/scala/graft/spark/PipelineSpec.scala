@@ -29,7 +29,7 @@ class PipelineSpec extends AnyFunSuite {
   test("end-to-end pipeline: checker families route and extract correctly") {
     val input = SpanGen.checkerDocs(spark, dir).toDF()
     val prev = SpanGen.prevState(spark, dir)
-    val out = Pipeline.run(spark, input, prev, None, ts, "t1", numPartitions = 4).toDF().cache()
+    val out = Pipeline.run(spark, input, prev, None, ts, "t1").toDF().cache()
 
     // reasons present exactly per the planted families
     val reasons = out.select("doc_id", "update_reason").collect()
@@ -73,53 +73,75 @@ class PipelineSpec extends AnyFunSuite {
     assert(r.spans == expected)
   }
 
-  test("skew salting: salted and unsalted plans produce identical results") {
-    import spark.implicits._
-    // make a few mega-docs by repeating text
-    val docs = SpanGen.documents(spark, dir).limit(60)
-      .map { r =>
-        val text = if (r.doc_id % 19 == 0) (r.text + " ") * 2000 else r.text
-        Synth.doc(r.doc_id, text, r.source)
-      }.toDF()
-      .withColumn("update_reason", lit("NOT_EXTRACTED_BEFORE"))
-      .withColumn("route", lit("Standard"))
-
-    def results(budget: Long) = {
-      val salted = Pipeline.saltByCost(docs, 4, budget).as[CheckedDoc]
-      Pipeline.extractStage(salted, ts, "t3").toDF()
-        .select("doc_id", "fulltext", "acknowledgements")
-        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).sortBy(_._1).toSeq
-    }
-    assert(results(budgetBytesForAll) == results(1024)) // everything vs nothing salted
-  }
-  private val budgetBytesForAll = Long.MaxValue
-
-  test("default run() scans the input once; salt modes duplicate the subtree") {
-    import spark.implicits._
+  test("run() plans exactly one leaf per input") {
     val input = SpanGen.checkerDocs(spark, dir).toDF()
     val prev = SpanGen.prevState(spark, dir)
-    // the salt operators are a union of two filters over the same child and
-    // there is no Exchange for ReuseExchange to dedup, so the scan+join
-    // subtree executes once per branch — the default must stay single-scan
-    def leafCount(salt: String): Int =
-      Pipeline.run(spark, input, prev, None, ts, "ps", 4, salt = salt)
-        .queryExecution.optimizedPlan.collectLeaves().size
-    val none = leafCount("none")
-    assert(leafCount("heavy") > none, "salt=heavy should duplicate the scan subtree")
-    assert(leafCount("all") > none, "salt=all should duplicate the scan subtree")
+    // one leaf for the input and one for the checker state: the extract
+    // stage re-executes no part of the scan + join subtree
+    val leaves = Pipeline.run(spark, input, prev, None, ts, "ps")
+      .queryExecution.optimizedPlan.collectLeaves()
+    assert(leaves.size == 2, leaves.mkString("\n"))
   }
 
-  test("native Catalyst extract expression == typed mapPartitions stage") {
+  test("native extract stage == Dispatcher.extract per row") {
     import spark.implicits._
-    val docs = SpanGen.docs(spark, dir).toDF()
+    val docs = SpanGen.docs(spark, dir).collect().toSeq
+    val in = docs.toDF()
       .withColumn("update_reason", lit("NOT_EXTRACTED_BEFORE"))
       .withColumn("route", lit("Standard"))
-    val typed = Pipeline.extractStage(docs.as[CheckedDoc], ts, "x").toDF()
-      .select("doc_id", "spans", "fulltext", "acknowledgements", "dataset", "facility", "error", "lineage")
-    val native = Pipeline.extractStageNative(docs, ts, "x")
-      .select("doc_id", "spans", "fulltext", "acknowledgements", "dataset", "facility", "error", "lineage")
-    assert(native.exceptAll(typed).count() == 0)
-    assert(typed.exceptAll(native).count() == 0)
+    val native = Pipeline.extractStageNative(in, ts, "x")
+      .select("doc_id", "spans", "fulltext", "acknowledgements", "dataset", "facility", "error")
+      .as[(String, Seq[Span], String, String, Seq[String], Seq[String], String)]
+      .collect().map(r => r._1 -> r).toMap
+    assert(native.size == docs.size)
+    docs.foreach { d =>
+      val expected = graft.core.Dispatcher.extract(d) match {
+        case Right(r) => (d.doc_id, r.spans, r.fulltext, r.acknowledgements,
+          r.dataset, r.facility, null)
+        case Left(err) => (d.doc_id, Seq.empty, null, null, Seq.empty, Seq.empty, err)
+      }
+      assert(native(d.doc_id) == expected, d.doc_id)
+    }
+  }
+
+  test("url-only http rows fetch source_path like Dispatcher.extract (200 and 404)") {
+    import spark.implicits._
+    import com.sun.net.httpserver.HttpServer
+    val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    def serve(path: String, status: Int, body: String): Unit =
+      server.createContext(path, ex => {
+        val bytes = body.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        ex.sendResponseHeaders(status, bytes.length.toLong)
+        ex.getResponseBody.write(bytes)
+        ex.close()
+      }): Unit
+    serve("/ok", 200, "served   body  " + "x" * 150)
+    serve("/missing", 404, "nope")
+    server.start()
+    try {
+      val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+      val docs = Seq("H1" -> s"$base/ok", "H2" -> s"$base/missing").map { case (id, url) =>
+        graft.core.Doc(id, "http", "p", url, Seq.empty, null, null)
+      }
+      val out = Pipeline.extractStageNative(
+          docs.toDF().withColumn("update_reason", lit("NOT_EXTRACTED_BEFORE")), ts, "h")
+        .select("doc_id", "spans", "fulltext", "error")
+        .as[(String, Seq[Span], String, String)].collect().map(r => r._1 -> r).toMap
+      val ok = graft.core.Dispatcher.extract(docs.head).toOption.get
+      assert(ok.fulltext == "served body")
+      assert(out("H1") == (("H1", ok.spans, ok.fulltext, null)))
+      assert(out("H2") == (("H2", Seq.empty, null, "Status code not 200: 404")))
+    } finally server.stop(0)
+  }
+
+  test("graft_extract with the wrong number of arguments is an AnalysisException") {
+    ExtractDocExpr.register(spark)
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT graft_extract('D1')").queryExecution.analyzed)
+    assert(e.getMessage.contains("graft_extract"), e.getMessage)
+    // the builder GraftExtensions injects is the same checked one
+    intercept[org.apache.spark.sql.AnalysisException](
+      ExtractDocExpr.build(Seq.fill(4)(org.apache.spark.sql.catalyst.expressions.Literal("x"))))
   }
 
   test("lineage is deterministic across runs and partitionings") {
@@ -139,11 +161,11 @@ class PipelineSpec extends AnyFunSuite {
   test("resume: partial output + anti-join rerun = full output, no duplicates") {
     val input = SpanGen.docs(spark, dir).toDF().limit(100).cache()
     val prev = SpanGen.prevState(spark, dir)
-    val full = Pipeline.run(spark, input, prev, None, ts, "t4", 4).toDF()
+    val full = Pipeline.run(spark, input, prev, None, ts, "t4").toDF()
       .select("doc_id").cache()
     val committed = full.limit(40).cache()
     val resumedInput = Pipeline.resume(input, committed)
-    val resumed = Pipeline.run(spark, resumedInput, prev, None, ts, "t4b", 4).toDF().select("doc_id")
+    val resumed = Pipeline.run(spark, resumedInput, prev, None, ts, "t4b").toDF().select("doc_id")
     val union = committed.unionAll(resumed)
     assert(union.count() == full.count())
     assert(union.distinct().count() == union.count())
@@ -158,7 +180,7 @@ class PipelineSpec extends AnyFunSuite {
     val prevOut = Seq(("D000000014", Seq(Span("text", "RECOVERED BODY", null, 0)),
       "RECOVERED BODY", "RECOVERED ACK", Seq.empty[String], Seq.empty[String]))
       .toDF("doc_id", "spans", "fulltext", "acknowledgements", "dataset", "facility")
-    val out = Pipeline.run(spark, input, prev, Some(prevOut), ts, "t5", 4).toDF().collect()
+    val out = Pipeline.run(spark, input, prev, Some(prevOut), ts, "t5").toDF().collect()
     assert(out.length == 1)
     assert(out.head.getAs[String]("fulltext") == "RECOVERED BODY")
     assert(out.head.getAs[String]("lineage").contains("recovered"))
@@ -198,7 +220,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(new java.io.File(inDir).listFiles().count(_.getName.endsWith(".parquet")) >= 3)
     val prev = SpanGen.prevState(spark, dir)
     val q = StreamingPipeline.run(spark, inDir, outDir, cpDir, prev, ts,
-      numPartitions = 4, maxFilesPerTrigger = Some(1))
+      maxFilesPerTrigger = Some(1))
     q.awaitTermination(120000)
     // one file per trigger -> at least 3 committed micro-batches
     val batches = new java.io.File(s"$cpDir/commits").listFiles()
@@ -206,7 +228,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(batches >= 3, s"expected >=3 micro-batches, got $batches")
     // and the chunked result equals the batch run
     val streamed = spark.read.parquet(outDir).select("doc_id", "fulltext")
-    val batch = Pipeline.run(spark, spark.read.parquet(inDir), prev, None, ts, "bp", 4)
+    val batch = Pipeline.run(spark, spark.read.parquet(inDir), prev, None, ts, "bp")
       .toDF().select("doc_id", "fulltext")
     assert(streamed.exceptAll(batch).count() == 0)
     assert(batch.exceptAll(streamed).count() == 0)
@@ -223,13 +245,13 @@ class PipelineSpec extends AnyFunSuite {
     input.limit(15).coalesce(1).write.mode("append").parquet(inDir)
     val prev = SpanGen.prevState(spark, dir)
     val q = StreamingPipeline.run(spark, inDir, outDir, cpDir, prev, ts,
-      numPartitions = 4, maxFilesPerTrigger = Some(1),
+      maxFilesPerTrigger = Some(1),
       dedupWithin = Some("1 hour"))
     q.awaitTermination(120000)
     val streamed = spark.read.parquet(outDir).select("doc_id", "fulltext")
     // exactly the single-delivery batch result: nothing extracted twice
     assert(streamed.count() == streamed.select("doc_id").distinct().count())
-    val batch = Pipeline.run(spark, input, prev, None, ts, "dd", 4)
+    val batch = Pipeline.run(spark, input, prev, None, ts, "dd")
       .toDF().select("doc_id", "fulltext")
     assert(streamed.exceptAll(batch).count() == 0)
     assert(batch.exceptAll(streamed).count() == 0)
@@ -241,10 +263,10 @@ class PipelineSpec extends AnyFunSuite {
     val input = SpanGen.checkerDocs(spark, dir).toDF().limit(80)
     input.write.parquet(inDir)
     val prev = SpanGen.prevState(spark, dir)
-    val q = StreamingPipeline.run(spark, inDir, outDir, cpDir, prev, ts, numPartitions = 4)
+    val q = StreamingPipeline.run(spark, inDir, outDir, cpDir, prev, ts)
     q.awaitTermination(120000)
     val streamed = spark.read.parquet(outDir).select("doc_id", "fulltext")
-    val batch = Pipeline.run(spark, spark.read.parquet(inDir), prev, None, ts, "t6", 4)
+    val batch = Pipeline.run(spark, spark.read.parquet(inDir), prev, None, ts, "t6")
       .toDF().select("doc_id", "fulltext")
     assert(streamed.exceptAll(batch).count() == 0)
     assert(batch.exceptAll(streamed).count() == 0)

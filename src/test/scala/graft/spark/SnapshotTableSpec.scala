@@ -26,13 +26,13 @@ class SnapshotTableSpec extends AnyFunSuite {
     // run 1 commits a 40-doc input slice (the checker legitimately drops
     // ignored/fresh docs, so the committed count is <= 40)
     val slice = input.limit(40).cache()
-    Pipeline.runCommitted(spark, slice, prev, None, ts, "r1", table, 4)
+    Pipeline.runCommitted(spark, slice, prev, None, ts, "r1", table)
     val afterR1 = SnapshotTable.read(spark, table).get.select("doc_id").as[String].collect().toSet
     assert(afterR1.nonEmpty && afterR1.size <= 40)
 
     // a job dies AFTER writing data files but BEFORE the manifest swap:
     // exactly what SnapshotTable.append does in step 1 with no step 3/4
-    Pipeline.run(spark, input, prev, None, ts, "crashed", 4).toDF()
+    Pipeline.run(spark, input, prev, None, ts, "crashed").toDF()
       .write.parquet(s"$table/data/${java.util.UUID.randomUUID()}")
 
     // the committed view is unchanged — stray files are invisible
@@ -40,9 +40,9 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(afterCrash == afterR1)
 
     // rerun over the FULL input: resume anti-join extracts only the rest
-    Pipeline.runCommitted(spark, input, prev, None, ts, "r2", table, 4)
+    Pipeline.runCommitted(spark, input, prev, None, ts, "r2", table)
     val full = SnapshotTable.read(spark, table).get.select("doc_id").as[String].collect().toSeq
-    val expected = Pipeline.run(spark, input, prev, None, ts, "all", 4)
+    val expected = Pipeline.run(spark, input, prev, None, ts, "all")
       .toDF().select("doc_id").as[String].collect().toSet
     assert(full.toSet == expected)
     assert(full.size == full.toSet.size, "duplicate doc_ids after rerun")
@@ -50,7 +50,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     // a third run: the checker re-examines skipped docs (reference
     // semantics — a doc can become stale later) but extracts nothing new,
     // so NO new snapshot is created and the table is unchanged
-    val r3 = Pipeline.runCommitted(spark, input, prev, None, ts, "r3", table, 4)
+    val r3 = Pipeline.runCommitted(spark, input, prev, None, ts, "r3", table)
     assert(r3 == 1L) // still the r2 snapshot
     assert(SnapshotTable.read(spark, table).get.select("doc_id").as[String]
       .collect().toSet == full.toSet)
@@ -78,7 +78,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     val broken = good.withColumn("format",
       when(col("doc_id") === "D000000028", lit("weird")).otherwise(col("format")))
 
-    assert(Pipeline.runCommitted(spark, broken, prev, None, ts, "e1", table, 2) == 0L)
+    assert(Pipeline.runCommitted(spark, broken, prev, None, ts, "e1", table) == 0L)
     val raw1 = SnapshotTable.read(spark, table).get
     assert(raw1.count() == 2)
     assert(raw1.filter(col("error").isNotNull).select("doc_id").as[String]
@@ -87,12 +87,12 @@ class SnapshotTableSpec extends AnyFunSuite {
     // rerun with the SAME broken input: the failed doc is retried (the
     // reference's skip-if-written skips only written fulltext) — a new
     // snapshot commits, the success row is NOT re-extracted
-    assert(Pipeline.runCommitted(spark, broken, prev, None, ts, "e2", table, 2) == 1L)
+    assert(Pipeline.runCommitted(spark, broken, prev, None, ts, "e2", table) == 1L)
     assert(SnapshotTable.read(spark, table).get.count() == 3)
 
     // the source is fixed -> the retry succeeds; merge-on-read yields one
     // CURRENT row per doc, both successful (the old error rows superseded)
-    assert(Pipeline.runCommitted(spark, good, prev, None, ts, "e3", table, 2) == 2L)
+    assert(Pipeline.runCommitted(spark, good, prev, None, ts, "e3", table) == 2L)
     val cur = SnapshotTable.readCurrent(spark, table).get
     assert(cur.count() == 2)
     assert(cur.filter(col("error").isNotNull).count() == 0)
@@ -100,7 +100,7 @@ class SnapshotTableSpec extends AnyFunSuite {
 
     // fully-committed table: a rerun finds nothing to do, returns -1, and
     // does not advance table history
-    assert(Pipeline.runCommitted(spark, good, prev, None, ts, "e4", table, 2) == -1L)
+    assert(Pipeline.runCommitted(spark, good, prev, None, ts, "e4", table) == -1L)
     assert(SnapshotTable.lineage(spark, table).map(_.snapshot).max == 2L)
     // metrics sidecar: one batch per committing run, none for the no-op
     val metrics = spark.read.parquet(s"$table/metrics")
@@ -331,9 +331,9 @@ class SnapshotTableSpec extends AnyFunSuite {
       .filter(col("doc_id").isin("D000000007", "D000000028"))
     val broken = good.withColumn("format",
       when(col("doc_id") === "D000000028", lit("weird")).otherwise(col("format")))
-    Pipeline.runCommitted(spark, broken, prev, None, ts, "m1", table, 2)
-    Pipeline.runCommitted(spark, broken, prev, None, ts, "m2", table, 2)
-    Pipeline.runCommitted(spark, good, prev, None, ts, "m3", table, 2)
+    Pipeline.runCommitted(spark, broken, prev, None, ts, "m1", table)
+    Pipeline.runCommitted(spark, broken, prev, None, ts, "m2", table)
+    Pipeline.runCommitted(spark, good, prev, None, ts, "m3", table)
     val before = SnapshotTable.readCurrent(spark, table).get
       .select("doc_id", "fulltext", "error").as[(String, String, String)]
       .collect().toSet
@@ -354,7 +354,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     // maintain again: already compact, nothing left to reclaim
     assert(Pipeline.maintain(spark, table, olderThanMs = 0) == ((-1L, 0, 0)))
     // and ingest keeps working on the maintained table
-    assert(Pipeline.runCommitted(spark, good, prev, None, ts, "m4", table, 2) == -1L)
+    assert(Pipeline.runCommitted(spark, good, prev, None, ts, "m4", table) == -1L)
   }
 
   /** Docs 7 and 28 reach the extract stage; doc 28 in an unaccepted
@@ -387,7 +387,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     val table = tmpTable()
     val prev = SpanGen.prevState(spark, dir)
     assert(Pipeline.runCommitted(spark, twoDocs(broken = false).filter(lit(false)), prev,
-      None, ts, "z1", table, 2) == -1L)
+      None, ts, "z1", table) == -1L)
     assert(!new java.io.File(s"$table/_current").exists())
     assert(SnapshotTable.history(spark, table).isEmpty)
     assert(!new java.io.File(s"$table/metrics").exists())
@@ -400,7 +400,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     val table = tmpTable()
     val prev = SpanGen.prevState(spark, dir)
     val input = twoDocs(broken = true)
-    assert(Pipeline.runCommitted(spark, input, prev, None, ts, "j1", table, 2) == 0L)
+    assert(Pipeline.runCommitted(spark, input, prev, None, ts, "j1", table) == 0L)
     // the rerun retries doc 28: it reads the table, resumes, extracts and
     // commits. A schema-inference job (SnapshotTable.read) runs outside any
     // SQL execution; an emptiness pre-pass (todo.isEmpty) and a Spark-written
@@ -427,7 +427,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     spark.sparkContext.setJobGroup(group, "runCommitted rerun")
     try {
-      assert(Pipeline.runCommitted(spark, input, prev, None, ts, "j2", table, 2) == 1L)
+      assert(Pipeline.runCommitted(spark, input, prev, None, ts, "j2", table) == 1L)
       org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
     } finally {
       spark.sparkContext.clearJobGroup()
@@ -441,7 +441,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     import org.apache.spark.sql.Row
     val table = tmpTable()
     val prev = SpanGen.prevState(spark, dir)
-    assert(Pipeline.runCommitted(spark, twoDocs(broken = true), prev, None, ts, "new", table, 2) == 0L)
+    assert(Pipeline.runCommitted(spark, twoDocs(broken = true), prev, None, ts, "new", table) == 0L)
     // a sidecar file as a Spark job wrote it for an older run
     Pipeline.metricsFrame(spark, Map("x_pdf" -> 3L, "e_other" -> 1L))
       .withColumn("snapshot_id", lit(7L))

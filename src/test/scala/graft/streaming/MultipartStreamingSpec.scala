@@ -134,7 +134,7 @@ class MultipartStreamingSpec extends AnyFunSuite {
     val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     val q = graft.spark.StreamingPipeline.runParts(
       spark, inDir, outDir, cpDir, prev, ts,
-      incompleteTimeoutMs = Some(1L), numPartitions = 2,
+      incompleteTimeoutMs = Some(1L),
       maxFilesPerTrigger = Some(1))
     q.awaitTermination(180000)
 
