@@ -1,5 +1,7 @@
 package graft.core
 
+import scala.util.control.NonFatal
+
 /** Format dispatch + per-document driver — the Scala re-expression of
   * EXTRACTOR_FACTORY and `extract_content`
   * (adsft/extraction.py:1177-1269, checker routing extraction.py:1227-1230).
@@ -94,7 +96,11 @@ object Dispatcher {
           Right(extractXml(doc, meta))
       }
     } catch {
-      case e: Throwable =>
+      // fatal JVM errors and task kills are not data: an error row would be
+      // retried by runCommitted forever
+      case ie: InterruptedException =>
+        Thread.currentThread().interrupt(); throw ie
+      case NonFatal(e) =>
         Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
     }
   }
@@ -155,7 +161,7 @@ object Dispatcher {
     val result =
       try PdfExtractor.extract(doc.spans)
       catch {
-        case _: Throwable =>
+        case NonFatal(_) =>
           // degraded retry: drop image runs (gs -dFILTERVECTOR analog)
           PdfExtractor.extract(doc.spans.filter(_.kind == "run"))
       }

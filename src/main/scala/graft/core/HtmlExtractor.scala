@@ -37,7 +37,7 @@ object HtmlExtractor {
 
     // 3. introduction removal (first matching xpath only, extraction.py:257-276)
     Rules.Html.introduction.iterator
-      .map(xp => MiniPath.eval(root, xp))
+      .map(MiniPath.eval(root, _))
       .find(_.nonEmpty)
       .map(_.head)
       .foreach { node =>
@@ -48,13 +48,11 @@ object HtmlExtractor {
       }
 
     // 4. references removal (extraction.py:278-289)
-    Rules.Html.references.foreach { xp =>
-      MiniPath.eval(root, xp).headOption.foreach { h2 =>
-        val ul = h2.getNext
-        if (ul != null && h2.parent != null) {
-          ul.parent.removeChild(ul)
-          h2.parent.removeChild(h2)
-        }
+    MiniPath.eval(root, Rules.Html.references).headOption.foreach { h2 =>
+      val ul = h2.getNext
+      if (ul != null && h2.parent != null) {
+        ul.parent.removeChild(ul)
+        h2.parent.removeChild(h2)
       }
     }
 
@@ -62,9 +60,9 @@ object HtmlExtractor {
     //    name contains "table" are collated, extraction.py:229)
     tables.filter(_._1.contains("table")).foreach { case (name, tableRaw) =>
       val tableRoot = parse(tableRaw)
-      val tableNode = MiniPath.eval(tableRoot, "//table").headOption.map(_.parent)
+      val tableNode = MiniPath.eval(tableRoot, Rules.Html.table).headOption.map(_.parent)
       tableNode.foreach { tn =>
-        val links = MiniPath.eval(root, s"""//a[contains(@href,"$name")]""")
+        val links = MiniPath.eval(root, Rules.Html.tableLinks(name))
         links.headOption.foreach { link =>
           val parent = link.parent
           if (parent != null) {
@@ -91,12 +89,10 @@ object HtmlExtractor {
         sb.append(t, a, b)
       }
     }
-    def walk(e: Elem): Unit = {
+    root.walk({ e =>
       if (e.tag == "img") e.attr("src").filter(_.nonEmpty).foreach(s => media += ((sb.length(), s)))
-      if (e.text != null) emitChunk(e.text)
-      e.children.foreach { c => walk(c); if (c.tail != null) emitChunk(c.tail) }
-    }
-    walk(root)
+      emitChunk(e.text)
+    }, e => if (e ne root) emitChunk(e.tail))
 
     def clean(s: String): String =
       CleanText.run(s, translateFlag = false, normaliseFlag = true, trimFlag = true)

@@ -1,5 +1,7 @@
 package graft.core
 
+import scala.util.control.NonFatal
+
 /** HTTP source extractor (reference StandardExtractorHTTP,
   * adsft/extraction.py:1004-1107 — "no use case" in production per its own
   * docstring, but implemented and tested there; same here).
@@ -49,8 +51,11 @@ object HttpExtractor {
       previousTimestamp: Option[java.time.Instant] = None): Either[String, String] = {
     val resp =
       try transport(url, requestHeaders(previousTimestamp))
-      catch { case e: Throwable =>
-        return Left(s"http transport error: ${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
+      catch {
+        case ie: InterruptedException =>
+          Thread.currentThread().interrupt(); throw ie
+        case NonFatal(e) =>
+          return Left(s"http transport error: ${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
       }
     if (resp.status != 200) Left(s"Status code not 200: ${resp.status}")
     else Right(CleanText.run(Option(resp.body).getOrElse(""),

@@ -4,7 +4,7 @@ package graft.core
 import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
-import graft.core.rules.{FieldRule, Rules}
+import graft.core.rules.Rules
 import graft.core.xml.{Dom, Elem, MiniPath}
 
 /** XML extraction engine (JATS / TEI / Elsevier variants).
@@ -197,11 +197,7 @@ object XmlExtractor {
       if (v != null || (anns != null && anns.nonEmpty))
         chunks += ((if (v == null) "" else v, if (anns == null) Seq.empty else anns.toSeq))
     }
-    def walk(x: Elem): Unit = {
-      slot(x, isTail = false)
-      x.children.foreach { c => walk(c); slot(c, isTail = true) }
-    }
-    walk(e)
+    e.walk(slot(_, isTail = false), c => if (c ne e) slot(c, isTail = true))
 
     val sb = new java.lang.StringBuilder()
     val media = Vector.newBuilder[MediaAnn]
@@ -246,7 +242,7 @@ object XmlExtractor {
       */
     def extractString(xpath: String, translateFlag: Boolean = true,
         extractAll: Boolean = false): String = {
-      val nodes = MiniPath.eval(root, xpath)
+      val nodes = MiniPath.eval(root, MiniPath.compile(xpath))
       if (nodes.isEmpty) return CleanText.run("", translateFlag, normaliseFlag = true, trimFlag = true)
       val used = if (extractAll) nodes else nodes.take(1)
       val joined = used.map(n => nodeText(n, surgeon).raw).mkString(" ")
@@ -262,7 +258,7 @@ object XmlExtractor {
     val surgeon = new Surgeon(root)
 
     // kill list, single doc-order evaluation (extraction.py:729-731)
-    val killed = MiniPath.evalUnion(root, Rules.killList)
+    val killed = MiniPath.eval(root, Rules.killList: _*)
     killed.foreach { node =>
       if (node.attachedTo(root)) {
         val ref = if (node.tag == "graphic") node.attr("href").filter(_.nonEmpty) else None
@@ -271,7 +267,7 @@ object XmlExtractor {
     }
 
     // acknowledgment relocation (always the xml rule set, extraction.py:733)
-    MiniPath.evalUnion(root, Rules.ackRelocate).foreach { node =>
+    MiniPath.eval(root, Rules.ackRelocate: _*).foreach { node =>
       if (node.attachedTo(root)) surgeon.appendOutsideParent(node)
     }
     new Prepared(root, surgeon)
@@ -300,8 +296,8 @@ object XmlExtractor {
     rules.foreach { rule =>
       if (rule.isList) {
         // extract_list: first non-empty xpath's attr list (extraction.py:793-858, 965-966)
-        val lists = rule.xpaths.iterator.map { xp =>
-          MiniPath.eval(root, xp).flatMap { node =>
+        val lists = rule.paths.iterator.map { path =>
+          MiniPath.eval(root, path).flatMap { node =>
             val raw = node.attr(rule.attr).orElse {
               val i = rule.attr.indexOf(':')
               if (i > 0) node.attr(rule.attr.substring(i + 1)) else None
@@ -318,8 +314,8 @@ object XmlExtractor {
         val extractAll = rule.name == "fulltext"
         val accepted = ArrayBuffer.empty[(String, NodeText)] // (cleaned, raw+media)
         var unique = true // sticky flag, mirroring extraction.py:889-935
-        rule.xpaths.foreach { xp =>
-          val nodes = MiniPath.eval(root, xp)
+        rule.paths.foreach { path =>
+          val nodes = MiniPath.eval(root, path)
           if (nodes.nonEmpty) {
             val used = if (extractAll) nodes else nodes.take(1)
             val parts = used.map(n => nodeText(n, surgeon))

@@ -1,16 +1,22 @@
 package graft.core.rules
 
+import graft.core.xml.MiniPath
+import graft.core.xml.MiniPath.{ContainsAttr, Path, Pred, Step}
+
 /** Declarative field-extraction rule tables — the Scala re-expression of the
   * reference's META_CONTENT (adsft/rules.py:4-101). Order matters: results of
   * successive xpaths are appended (with containment dedup) and string fields
   * are '\n'-joined (adsft/extraction.py:885-966, rules.py:1-3 comment).
+  * `xpaths` keeps the reference's strings; `paths` is them compiled, once.
   */
 final case class FieldRule(
     name: String,
     xpaths: Vector[String],
     isList: Boolean,
     attr: String = "xlink:href"
-)
+) {
+  val paths: Vector[Path] = xpaths.map(MiniPath.compile)
+}
 
 object Rules {
 
@@ -63,29 +69,33 @@ object Rules {
     * extraction (adsft/extraction.py:729-731). The processing-instruction
     * entry of the reference list is handled by the raw-string pre-pass.
     */
-  val killList: Vector[String] = Vector(
+  val killList: Vector[Path] = Vector(
     "//table", "//graphic", "//disp-formula", "//inline-formula",
     "//formula", "//tex-math", "//bibliography"
-  )
+  ).map(MiniPath.compile)
 
   /** Acknowledgment-bearing nodes are moved out of their parent before
     * extraction so body text excludes them (adsft/extraction.py:733-735 —
     * note the reference always uses the *xml* table's ack xpaths here, for
     * every format; mirrored exactly).
     */
-  val ackRelocate: Vector[String] =
-    xml.find(_.name == "acknowledgements").get.xpaths
+  val ackRelocate: Vector[Path] =
+    xml.find(_.name == "acknowledgements").get.paths
 
   /** HTML extraction xpaths (rules.py:77-95). */
   object Html {
-    val introduction: Vector[String] = Vector(
+    val introduction: Vector[Path] = Vector(
       "//h2[contains(.,\"ntroduction\")]",
       "//h3[contains(.,\"ntroduction\")]",
       "//p[contains(.,\"Abstract\")]"
-    )
-    val references: Vector[String] = Vector("//h2[contains(.,\"References\")]")
-    val table: Vector[String] = Vector("//table")
-    def tableLinks(tableName: String): Vector[String] =
-      Vector(s"""//a[contains(@href, "$tableName")]""")
+    ).map(MiniPath.compile)
+    val references: Path = MiniPath.compile("//h2[contains(.,\"References\")]")
+    val table: Path = MiniPath.compile("//table")
+
+    /** `//a[contains(@href, "<tableName>")]`, built directly: a companion's
+      * file name is data, so no character in it can change the query.
+      */
+    def tableLinks(tableName: String): Path =
+      Path(Vector(Step("a", Some(Pred(Vector(ContainsAttr("href", tableName)), negated = false)))))
   }
 }

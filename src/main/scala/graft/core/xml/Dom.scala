@@ -62,19 +62,38 @@ final class Elem(var tag: String) {
     false
   }
 
-  /** All elements in document order, self included. */
-  def iterAll: Iterator[Elem] = Iterator.single(this) ++ children.iterator.flatMap(_.iterAll)
+  /** Walk the subtree in document order: `enter` on each element, self
+    * first, and `leave` once that element's subtree is done. The open path
+    * lives on an explicit stack, so no input depth can overflow the thread's
+    * stack and the walk gives the same result on every thread.
+    */
+  def walk(enter: Elem => Unit, leave: Elem => Unit): Unit = {
+    val open = ArrayBuffer(this)
+    var next = new Array[Int](16) // per open element: index of its next child
+    enter(this)
+    while (open.nonEmpty) {
+      val d = open.length - 1
+      val e = open(d)
+      if (next(d) < e.children.length) {
+        val c = e.children(next(d))
+        next(d) += 1
+        enter(c)
+        if (open.length == next.length) next = java.util.Arrays.copyOf(next, next.length * 2)
+        next(open.length) = 0
+        open += c
+      } else {
+        leave(e)
+        open.remove(d)
+      }
+    }
+  }
 
   /** Text chunks in document order (lxml `itertext`): text, then for each
     * child its itertext followed by its tail. Null slots are skipped.
     */
   def itertext: Vector[String] = {
     val out = Vector.newBuilder[String]
-    def walk(e: Elem): Unit = {
-      if (e.text != null) out += e.text
-      e.children.foreach { c => walk(c); if (c.tail != null) out += c.tail }
-    }
-    walk(this)
+    walk(e => if (e.text != null) out += e.text, e => if ((e ne this) && e.tail != null) out += e.tail)
     out.result()
   }
 

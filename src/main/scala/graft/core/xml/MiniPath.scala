@@ -13,8 +13,9 @@ package graft.core.xml
   *           | 'contains(@'NAME','STRING')'
   *           | 'local-name()='STRING
   *
-  * Evaluation is a single DFS in document order with greedy ancestor matching
-  * for the descendant axis — sufficient and exact for `//a//b//c` forms.
+  * Evaluation is one walk in document order ([[Elem.walk]]) with greedy
+  * ancestor matching for the descendant axis — sufficient and exact for
+  * `//a//b//c` forms.
   */
 object MiniPath {
 
@@ -29,17 +30,7 @@ object MiniPath {
 
   final case class Path(steps: Vector[Step])
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, Path]()
-
   def compile(expr: String): Path = {
-    val cached = cache.get(expr)
-    if (cached != null) return cached
-    val p = parse(expr)
-    cache.putIfAbsent(expr, p)
-    p
-  }
-
-  private def parse(expr: String): Path = {
     val e = expr.trim
     require(e.startsWith("//"), s"unsupported xpath (must start with //): $expr")
     val steps = Vector.newBuilder[Step]
@@ -154,54 +145,27 @@ object MiniPath {
     }
   }
 
-  /** Evaluate under `root` (root itself excluded), document order, no dups. */
-  def eval(root: Elem, expr: String): Vector[Elem] = eval(root, compile(expr))
-
-  def eval(root: Elem, path: Path): Vector[Elem] = {
-    val steps = path.steps
+  /** Elements under `root` (root itself excluded) that match any of `paths`,
+    * in document order, each once (lxml `a | b` semantics).
+    */
+  def eval(root: Elem, paths: Path*): Vector[Elem] = {
     val out = Vector.newBuilder[Elem]
-    // DFS; for each elem matching the last step, check ancestors greedily
-    def ancestorsMatch(e: Elem): Boolean = {
-      var si = steps.length - 2
-      var a = e.parent
-      while (si >= 0 && a != null) {
-        if ((a ne root) && stepMatches(a, steps(si))) si -= 1
-        a = a.parent
-      }
-      si < 0
-    }
-    def dfs(e: Elem): Unit = {
-      e.children.foreach { c =>
-        if (stepMatches(c, steps.last) && (steps.length == 1 || ancestorsMatch(c))) out += c
-        dfs(c)
-      }
-    }
-    dfs(root)
+    root.walk(e => if ((e ne root) && paths.exists(matches(root, e, _))) out += e, _ => ())
     out.result()
   }
 
-  /** Union of several paths, document order (lxml `a | b` semantics). */
-  def evalUnion(root: Elem, exprs: Seq[String]): Vector[Elem] = {
-    val paths = exprs.map(compile)
-    val out = Vector.newBuilder[Elem]
-    def dfs(e: Elem): Unit = {
-      e.children.foreach { c =>
-        if (paths.exists { p =>
-              stepMatches(c, p.steps.last) && (p.steps.length == 1 || {
-                val steps = p.steps
-                var si = steps.length - 2
-                var a = c.parent
-                while (si >= 0 && a != null) {
-                  if ((a ne root) && stepMatches(a, steps(si))) si -= 1
-                  a = a.parent
-                }
-                si < 0
-              })
-            }) out += c
-        dfs(c)
-      }
+  /** `e` matches the last step and its ancestors below `root` match the
+    * earlier steps, bottom-up and greedily — exact for `//a//b//c` forms.
+    */
+  private def matches(root: Elem, e: Elem, path: Path): Boolean = {
+    val steps = path.steps
+    if (!stepMatches(e, steps.last)) return false
+    var si = steps.length - 2
+    var a = e.parent
+    while (si >= 0 && a != null) {
+      if ((a ne root) && stepMatches(a, steps(si))) si -= 1
+      a = a.parent
     }
-    dfs(root)
-    out.result()
+    si < 0
   }
 }

@@ -30,6 +30,15 @@ class HtmlExtractorSpec extends AnyFunSuite {
         "Key words: KEYWORD INTRODUCTION SECTION Table 1: TABLE TABLE (1) COPYRIGHT")
   }
 
+  test("a companion file name is data: table]1.html splices exactly like table_1.html") {
+    def main(name: String) =
+      s"""<html><body><p>BEFORE</p><p>See <a href="$name">Table 1</a> AFTER</p></body></html>"""
+    val table = "<html><body><div><table><tr><td>ONLY IN TABLE</td></tr></table></div></body></html>"
+    val plain = HtmlExtractor.extract(main("table_1.html"), Seq("table_1.html" -> table))
+    assert(plain.fulltext == "BEFORE See ONLY IN TABLE AFTER")
+    assert(HtmlExtractor.extract(main("table]1.html"), Seq("table]1.html" -> table)) == plain)
+  }
+
   test("img src becomes an interleaved media span") {
     val main = load(s"$intStub/full_test.html")
     val r = HtmlExtractor.extract(main, Seq.empty)
@@ -119,6 +128,27 @@ class DispatcherSpec extends AnyFunSuite {
   test("unsupported format is an error result, not an exception (extraction.py:1207)") {
     val doc = Doc("b3", "docx", "ADS", "/x/y/b3.docx", Vector(Span("raw", "x", null, 0)), null, ts)
     assert(Dispatcher.extract(doc).isLeft)
+  }
+
+  test("documents nested 10^5 deep extract the same on a 256 KiB and an 8 MiB thread stack") {
+    val n = 100000
+    def doc(fmt: String, raw: String) = Doc("d", fmt, "ADS", "/x/d", Vector(Span("raw", raw, null, 0)), null, ts)
+    val deep = Seq(
+      doc("xml", "<article><body>" + "<sec><p>a</p>" * n + "deep" + "</sec>" * n + "</body></article>"),
+      doc("html", "<html><body>" + "<div>x " * n + "deep" + "</div>" * n + "</body></html>"),
+      doc("xml", "<article><body>" + "<p>t " * n + "</body></article>")) // unclosed <p>
+    def onStack(bytes: Long, d: Doc): Either[String, Extracted] = {
+      var out: Either[String, Extracted] = null
+      val t = new Thread(null, () => out = Dispatcher.extract(d), "extract-stack", bytes)
+      t.start(); t.join()
+      out
+    }
+    deep.foreach { d =>
+      val small = onStack(256L * 1024, d)
+      assert(small.isRight, small)
+      assert(small.toOption.get.fulltext.length > n)
+      assert(onStack(8L * 1024 * 1024, d) == small)
+    }
   }
 
   test("Elsevier provider routes xml to the Elsevier rule set (extraction.py:1227-1230)") {

@@ -49,6 +49,25 @@ class HttpExtractorSpec extends AnyFunSuite {
     assert(seen._2("User-Agent") == "ADSClient")
   }
 
+  private val urlOnly = Doc("h3", "http", "p", "http://host/a.txt", Vector.empty, "", null)
+
+  test("dispatcher: a transport interrupt is rethrown with the interrupt flag set, not an error row") {
+    val transport: HttpExtractor.Transport = (_, _) => throw new InterruptedException("task killed")
+    assertThrows[InterruptedException](Dispatcher.extract(urlOnly, transport))
+    assert(Thread.interrupted()) // also clears the flag for the tests that follow
+  }
+
+  test("dispatcher: a fatal JVM error from the transport is rethrown, not an error row") {
+    val transport: HttpExtractor.Transport = (_, _) => throw new OutOfMemoryError("heap")
+    assertThrows[OutOfMemoryError](Dispatcher.extract(urlOnly, transport))
+  }
+
+  test("dispatcher: a transport IOException is still an error row") {
+    val transport: HttpExtractor.Transport = (_, _) => throw new java.io.IOException("reset")
+    val r = Dispatcher.extract(urlOnly, transport)
+    assert(r == Left("http transport error: IOException: reset"))
+  }
+
   test("dispatcher: pre-fetched http doc (payload spans) cleans like txt, no fetch") {
     val transport: HttpExtractor.Transport =
       (_, _) => throw new AssertionError("must not fetch")
