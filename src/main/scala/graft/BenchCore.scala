@@ -4,7 +4,7 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.gen.Synth
-import graft.spark.Pipeline
+import graft.spark.{Pipeline, Sessions}
 
 /** Shared pieces of the benchmark harness, used by both the coordinating
   * [[Bench]] main and the per-level forked [[BenchLevel]] main (one JVM per
@@ -17,10 +17,8 @@ private[graft] object BenchCore {
   /** Bucket count of the production table layout (see [[registerTables]]). */
   val Buckets = 128
 
-  /** Bucketed input layout on by default; SPARK_GRAFT_BENCH_BUCKETED=0
-    * restores plain parquet for comparison.
-    */
-  def bucketed: Boolean = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUCKETED", "1") == "1"
+  /** The input is always the bucketed layout; the frozen [[Bench]] reads this. */
+  val bucketed = true
 
   /** tmpfs when it has headroom, the default temp dir otherwise — the bench
     * must run on a stock container where /dev/shm may be tiny or absent.
@@ -33,39 +31,9 @@ private[graft] object BenchCore {
     s"$base/$sub"
   }
 
+  /** [[Sessions]]' profile plus the bucketed-layout settings of the bench input. */
   def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", 4 * cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      // size-adaptive post-shuffle partitioning (opt out with
-      // SPARK_GRAFT_AQE_COALESCE=0). Earlier rounds pinned coalescing OFF
-      // to hold a fixed 4-tasks/core granularity across scaling levels —
-      // but the headline pipeline plans ZERO Exchange (bucketed-scan
-      // sort-merge join), so coalescing cannot touch the scaling
-      // measurement at any level. What it does change is the
-      // 116-query profile, where tiny verification universes paid 128
-      // scheduled tasks per shuffle stage (q114: 11,871 tasks for a
-      // 180-doc batch); with AQE coalescing the task count derives from
-      // data SIZE — the scale-adaptive setting the optimization guide
-      // prescribes (tiny frame -> 1 task locally, 100 TB -> thousands of
-      // advisory-sized partitions on a cluster), not a constant tuned for
-      // either environment
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_COALESCE", "1") == "1")
-      // let AQE apply the same size-adaptive coalescing UNDER a persisted
-      // subtree (unigramSurprisal's token counts): by default
-      // InMemoryRelation pins its plan's partitioning, so a cached
-      // aggregate holds the pre-AQE 4-x-cores shuffle width forever and
-      // every consumer pays those scheduled tasks. Same scale-adaptive
-      // rationale (and the same opt-out) as coalescing itself; the
-      // headline pipeline persists nothing, so the scaling measurement is
-      // untouched
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_COALESCE", "1") == "1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val s = Sessions.builder(cores, s"graft-bench-$cores")
       // local-bench input is ~a GB: size splits so read parallelism >= cores
       // at every level (a real cluster's input has plenty of splits).
       .config("spark.sql.files.maxPartitionBytes", "8m")
@@ -83,14 +51,6 @@ private[graft] object BenchCore {
     s
   }
 
-  /** Re-register the bucketed tables in a fresh session's in-memory catalog
-    * (the warehouse data survives sessions and JVMs; the catalog entries do
-    * not — a production deployment gets this from the real table catalog).
-    * The DDL is derived from the parquet files themselves and cached next to
-    * the data (`<sub>.ddl`): schema inference over 128 bucket files cost each
-    * forked level JVM tens of seconds of its untimed setup; any JVM can still
-    * register without the cache, just slower.
-    */
   /** (table name, subdirectory) for the four bench tables: the full
     * amplified pair plus the ~1/100-scale warm pair with the IDENTICAL
     * bucketed layout (the JIT warmup runs the same zero-exchange plan the
@@ -122,7 +82,15 @@ private[graft] object BenchCore {
         s"results — rewrite the table with repartition($Buckets, key) before bucketBy")
   }
 
-  def registerTables(spark: SparkSession, path: String): Unit = if (bucketed) {
+  /** Re-register the bucketed tables in a fresh session's in-memory catalog
+    * (the warehouse data survives sessions and JVMs; the catalog entries do
+    * not — a production deployment gets this from the real table catalog).
+    * The DDL is derived from the parquet files themselves and cached next to
+    * the data (`<sub>.ddl`): schema inference over 128 bucket files cost each
+    * forked level JVM tens of seconds of its untimed setup; any JVM can still
+    * register without the cache, just slower.
+    */
+  def registerTables(spark: SparkSession, path: String): Unit = {
     for ((name, sub) <- tables) {
       assertOneFilePerBucket(s"$path/$sub")
       val ddlFile = new java.io.File(s"$path/$sub.ddl")
@@ -157,15 +125,15 @@ private[graft] object BenchCore {
     * pushes down but prunes nothing because every bucket file is a single
     * row group. A same-layout small table pair decodes 1/100 of the bytes
     * while compiling the identical zero-exchange bucketed-join plan.
-    * `parts` is unused: the pipeline's parallelism is the scan's split
-    * count. It stays because the frozen [[Bench]] passes it.
+    * `path` and `parts` are unused: the tables come from the catalog
+    * ([[registerTables]]) and the pipeline's parallelism is the scan's split
+    * count. They stay because the frozen [[Bench]] passes them.
     */
   def runPipelineOnce(spark: SparkSession, path: String, outPath: String,
       parts: Int, warm: Boolean = false): (Long, Double) = {
     val pre = if (warm) "warm_" else ""
-    val (input, prev) =
-      if (bucketed) (spark.table(s"graft_bench_${pre}input"), spark.table(s"graft_bench_${pre}prev"))
-      else (spark.read.parquet(s"$path/${pre}input"), spark.read.parquet(s"$path/${pre}prev"))
+    val input = spark.table(s"graft_bench_${pre}input")
+    val prev = spark.table(s"graft_bench_${pre}prev")
     input.queryExecution.analyzed // force listing+schema resolution pre-t0
     prev.queryExecution.analyzed
     val t0 = System.nanoTime()

@@ -16,9 +16,9 @@ import org.apache.spark.sql.SparkSession
   * Env knobs:
   *   SPARK_GRAFT_SF_DIR   (default /root/testdata/sf0.1)
   *   SPARK_GRAFT_CPUS     (default 32) — session master, like Bench
-  *   SPARK_GRAFT_EXTRA_REPEATS (default 1) — repeat the whole list N times;
-  *     memoized subtrees are released between repeats so every repeat pays
-  *     cold-build cost like a fresh driver run
+  *   SPARK_GRAFT_EXTRA_REPEATS (default 1) — repeat the whole list N times,
+  *     each in a new session (`newSession()`), so every repeat builds the
+  *     gates' shared subtrees cold, like a fresh driver run
   *   SPARK_GRAFT_EXTRA_MODE    count | noop  (action used per query)
   *   SPARK_GRAFT_EXTRA_PLAN_DIR  if set, writes <query>.txt formatted plans
   *
@@ -53,13 +53,13 @@ object BenchExtra {
     planDir.foreach(d => java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
 
     for (rep <- 1 to repeats) {
-      if (rep > 1) SparkEntry.unpersistSubtrees() // cold-build every repeat
+      val session = spark.newSession() // cold: no shared subtree views yet
       for (name <- names; fn <- SparkEntry.queries.get(name)) {
         spark.sparkContext.setJobDescription(name)
         // plans are dumped pre-run (pre-AQE shape, like explain())
         planDir.foreach { d =>
           val txt =
-            try fn(spark, sfDir).queryExecution.explainString(
+            try fn(session, sfDir).queryExecution.explainString(
               org.apache.spark.sql.execution.FormattedMode)
             catch { case e: Throwable => s"explain failed: ${e.getMessage}" }
           val w = new java.io.PrintWriter(s"$d/$name.txt")
@@ -71,7 +71,7 @@ object BenchExtra {
         listener.reset()
         val t0 = System.nanoTime()
         try {
-          val df = fn(spark, sfDir)
+          val df = fn(session, sfDir)
           if (mode == "noop") df.write.format("noop").mode("overwrite").save()
           else df.count(): Unit
         } catch { case e: Throwable => System.err.println(s"[extra] $name FAILED: $e") }

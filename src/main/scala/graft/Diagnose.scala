@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.gen.{SpanGen, Synth}
-import graft.spark.Pipeline
+import graft.spark.{Pipeline, Sessions}
 
 /** Single-document diagnostic entry point (reference `run.py --diagnose`,
   * run.py:119-127,205-224): runs ONE document through the exact production
@@ -76,13 +76,7 @@ object Diagnose {
     require(args.nonEmpty, "usage: graft.Diagnose <doc_id> [sfDir]")
     val docId = args(0).toLong
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-diagnose")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder(2, "graft-diagnose").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     println(report(spark, sfDir, docId))
     spark.stop()

@@ -125,14 +125,68 @@ object Dom {
     if (i > 0) name.substring(i + 1) else name
   }
 
+  /** The open elements of [[parse]], root at the bottom. `isOpen` keeps a
+    * count of open elements per tag name: one count cell per name, shared by
+    * every open element with that name, so a pop updates it without a
+    * lookup. The counts start at the first `isOpen` (built once from the
+    * stack), so a document whose end tags all close the top element never
+    * hashes a tag name.
+    */
+  private final class OpenStack(root: Elem) {
+    private var elems = new Array[Elem](16)
+    private var cells = new Array[Array[Int]](16)
+    private var depth = 0
+    private var counts: java.util.HashMap[String, Array[Int]] = null
+    elems(0) = root
+
+    def top: Elem = elems(depth)
+    def atRoot: Boolean = depth == 0
+
+    def isOpen(tag: String): Boolean = {
+      if (counts == null) {
+        counts = new java.util.HashMap[String, Array[Int]]()
+        var d = 1
+        while (d <= depth) { cells(d) = count(elems(d).tag); d += 1 }
+      }
+      val c = counts.get(tag)
+      c != null && c(0) > 0
+    }
+
+    private def count(tag: String): Array[Int] = {
+      var c = counts.get(tag)
+      if (c == null) { c = new Array[Int](1); counts.put(tag, c) }
+      c(0) += 1
+      c
+    }
+
+    def push(e: Elem): Unit = {
+      depth += 1
+      if (depth == elems.length) {
+        elems = java.util.Arrays.copyOf(elems, depth * 2)
+        cells = java.util.Arrays.copyOf(cells, depth * 2)
+      }
+      elems(depth) = e
+      if (counts != null) cells(depth) = count(e.tag)
+    }
+
+    def pop(): Unit = {
+      if (counts != null) cells(depth)(0) -= 1
+      elems(depth) = null
+      depth -= 1
+    }
+  }
+
   /** Build a tree from tokens. `htmlMode`: lowercase names, honor void tags.
     * `stripPrefixes`: drop namespace prefixes on tags and attrs (xml mode).
     * Lenient recovery: mismatched end tags close intervening open elements if
     * a matching ancestor is open, otherwise they are ignored; EOF closes all.
+    * [[OpenStack]] answers "is a matching ancestor open" in O(1), so stray
+    * end tags under a deep open path stay linear.
     */
   def parse(raw: String, htmlMode: Boolean, stripPrefixes: Boolean): Elem = {
     val root = new Elem("root")
-    var stack = List(root)
+    val open = new OpenStack(root)
+    def popWhile(p: Elem => Boolean): Unit = while (!open.atRoot && p(open.top)) open.pop()
 
     def norm(n: String): String = {
       val a = if (stripPrefixes) stripPrefix(n) else n
@@ -140,10 +194,10 @@ object Dom {
     }
 
     def addText(t: String): Unit = {
-      val top = stack.head
-      if (top.children.isEmpty) top.text = if (top.text == null) t else top.text + t
+      val e = open.top
+      if (e.children.isEmpty) e.text = if (e.text == null) t else e.text + t
       else {
-        val last = top.children.last
+        val last = e.children.last
         last.tail = if (last.tail == null) t else last.tail + t
       }
     }
@@ -154,14 +208,10 @@ object Dom {
         val name = norm(name0)
         if (htmlMode) {
           // implied end tags
-          if (closesP.contains(name))
-            while ((stack.head ne root) && stack.head.tag == "p") stack = stack.tail
-          if (name == "li")
-            while ((stack.head ne root) && stack.head.tag == "li") stack = stack.tail
-          if (name == "tr")
-            while ((stack.head ne root) && Set("td", "th", "tr").contains(stack.head.tag)) stack = stack.tail
-          if (name == "td" || name == "th")
-            while ((stack.head ne root) && (stack.head.tag == "td" || stack.head.tag == "th")) stack = stack.tail
+          if (closesP.contains(name)) popWhile(_.tag == "p")
+          if (name == "li") popWhile(_.tag == "li")
+          if (name == "tr") popWhile(e => e.tag == "td" || e.tag == "th" || e.tag == "tr")
+          if (name == "td" || name == "th") popWhile(e => e.tag == "td" || e.tag == "th")
         }
         val e = new Elem(name)
         if (attrs0.nonEmpty) {
@@ -173,14 +223,15 @@ object Dom {
           }
           e.attrs = b.result()
         }
-        stack.head.append(e)
+        open.top.append(e)
         val isVoid = htmlMode && voidTags.contains(name)
-        if (!selfClose && !isVoid) stack = e :: stack
+        if (!selfClose && !isVoid) open.push(e)
       case TEnd(name0) =>
         val name = norm(name0)
-        if (stack.exists(e => (e ne root) && e.tag == name)) {
-          while (stack.head.tag != name && (stack.head ne root)) stack = stack.tail
-          if (stack.head ne root) stack = stack.tail
+        if (!open.atRoot && open.top.tag == name) open.pop()
+        else if (open.isOpen(name)) {
+          popWhile(_.tag != name)
+          open.pop()
         } // else: stray end tag, ignore
     }
     root

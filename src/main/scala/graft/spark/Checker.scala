@@ -26,11 +26,6 @@ object Checker {
     when(sourcePath.contains("http://") || sourcePath.contains("https://"), "http")
       .otherwise(lower(regexp_extract(sourcePath, "\\.([^./]+)$", 1)))
 
-  /** total raw text bytes carried by a doc (the zero-byte guard). */
-  def spanCost(spans: Column): Column =
-    coalesce(aggregate(spans, lit(0L), (acc, s) =>
-      acc + coalesce(length(s.getField("text")).cast("long"), lit(0L))), lit(0L))
-
   /** Classify every input row. `input` must have columns
     * (doc_id, format, provider, source_path, spans, update_flag, src_mtime);
     * `prev` has (doc_id, prev_ft_source, meta_mtime, fulltext_mtime,
@@ -39,13 +34,7 @@ object Checker {
     * [[filterNeedsUpdate]] to keep the to-extract set.
     */
   def classify(input: DataFrame, prev: DataFrame): DataFrame = {
-    // span cost is O(spans) per row and the classifier output feeds both a
-    // Filter and a Project (Catalyst pushes the filter's predicate through
-    // the projection, duplicating the CASE into both operators) — computing
-    // the cost as a pre-join column makes the duplicated CASE reference an
-    // attribute, so the aggregate() itself runs once per row, below the join
-    val inputC = input.withColumn("__span_cost", spanCost(col("spans")))
-    val joined = inputC.alias("i").join(
+    val joined = input.alias("i").join(
       prev.alias("p"),
       col("i.doc_id") === col("p.doc_id"),
       "left_outer")
@@ -66,10 +55,13 @@ object Checker {
         .when(col("p.doc_id").isNull, "NOT_EXTRACTED_BEFORE")
         .otherwise(metaUpdate)
 
-    // zero-byte / missing-source overrides run AFTER the above (checker.py:239-248)
+    // zero-byte / missing-source overrides run AFTER the above (checker.py:239-248);
+    // a doc is zero-byte unless some span has a non-empty text, and `exists`
+    // stops at the first one
+    val hasText = exists(col("i.spans"), s => coalesce(s.getField("text"), lit("")) =!= "")
     val update =
       when(col("i.spans").isNull, "IGNORE_NON_EXISTENT_FT_SOURCE")
-        .when(col("i.__span_cost") === 0L, "IGNORE_ZERO_BYTE_FT_SOURCE")
+        .when(!hasText, "IGNORE_ZERO_BYTE_FT_SOURCE")
         .otherwise(update0)
 
     // PDF routing to its own queue (checker.py:266-277)

@@ -4,14 +4,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** E12 Grobid extractor semantics (reference GrobidPDFExtractor,
   * adsft/extraction.py:1133-1173) with an injected transport, golden-checked
-  * against the reference's own Grobid TEI stub output.
+  * against a hand-written multi-line Grobid TEI response in the shape of the
+  * reference's stub (`test.astro-ph-0002105.tei.xml`).
   */
 class GrobidExtractorSpec extends AnyFunSuite {
 
-  private val teiStub = new String(
-    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      "/root/reference/tests/test_unit/stub_data/test.astro-ph-0002105.tei.xml")),
-    java.nio.charset.StandardCharsets.UTF_8)
+  private val teiStub = {
+    val in = getClass.getResourceAsStream("/grobid/astro-ph-0002105.tei.xml")
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8) finally in.close()
+  }
 
   private def ok(body: String): GrobidExtractor.Transport =
     (_, _, _) => HttpExtractor.Response(200, body)

@@ -9,13 +9,7 @@ import graft.gen.{SpanGen, Synth}
 
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.builder(4, "graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
@@ -282,6 +276,32 @@ class CheckerSpec extends AnyFunSuite {
       .toDF("source_path")
       .select(Checker.deriveFormat(col("source_path")).as("f"))
     assert(df.collect().map(_.getString(0)).toSeq == Seq("pdf", "xml", "http", ""))
+  }
+
+  test("zero-byte guard truth table: null spans, then no non-empty text (checker.py:239-248)") {
+    import spark.implicits._
+    def doc(id: String, flag: String, spans: Seq[Span]) =
+      graft.core.Doc(id, "txt", "ADS", s"/s/$id.txt", spans, flag, null)
+    def raw(t: String) = Span("raw", t, null, 0)
+    val input = Seq(
+      doc("null", null, null),
+      doc("empty", null, Seq.empty),
+      doc("nullElem", null, Seq(null)),
+      doc("nullText", null, Seq(raw(null))),
+      doc("emptyText", null, Seq(raw(""))),
+      doc("oneText", null, Seq(raw(""), null, Span("image", null, "1:1:1", 1), raw("x"), raw(""))),
+      doc("forced", "FORCE_TO_EXTRACT", Seq(raw("x"), raw(null)))).toDF()
+    val prev = Seq.empty[Synth.PrevState].toDF()
+    val got = Checker.classify(input, prev).select("doc_id", "update_reason").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(got == Map(
+      "null" -> "IGNORE_NON_EXISTENT_FT_SOURCE",
+      "empty" -> "IGNORE_ZERO_BYTE_FT_SOURCE",
+      "nullElem" -> "IGNORE_ZERO_BYTE_FT_SOURCE",
+      "nullText" -> "IGNORE_ZERO_BYTE_FT_SOURCE",
+      "emptyText" -> "IGNORE_ZERO_BYTE_FT_SOURCE",
+      "oneText" -> "NOT_EXTRACTED_BEFORE",
+      "forced" -> "FORCE_TO_EXTRACT"))
   }
 
   test("facility NER: gazetteer matches deduped across fulltext+ack (ner.py:19-38)") {
