@@ -63,15 +63,21 @@ object HttpExtractor {
   }
 
   /** Real network transport (JDK HttpClient): what [[Dispatcher.extract]]
-    * and so the Spark extract stage use for a payload-less http doc.
+    * and so the Spark extract stage use for a payload-less http doc. It
+    * times out like Grobid ([[GrobidExtractor.TimeoutMs]]), so a silent
+    * server cannot hold a task forever.
     */
-  lazy val defaultTransport: Transport = {
-    // one shared client per JVM (selector thread + connection pool reuse),
-    // created on FIRST request — merely referencing the transport (every
-    // Dispatcher.extract call does) must not spawn an idle selector thread
-    lazy val client = java.net.http.HttpClient.newHttpClient()
+  lazy val defaultTransport: Transport = transport(java.time.Duration.ofMillis(GrobidExtractor.TimeoutMs))
+
+  /** A JDK-client transport whose connect and request each give up after
+    * `timeout`, a transport error.
+    */
+  private[core] def transport(timeout: java.time.Duration): Transport = {
+    // one shared client, created on FIRST request: merely referencing the
+    // transport (every Dispatcher.extract call does) spawns no selector thread
+    lazy val client = java.net.http.HttpClient.newBuilder().connectTimeout(timeout).build()
     (url, headers) => {
-      val builder = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
+      val builder = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url)).timeout(timeout)
       headers.foreach { case (k, v) => builder.header(k, v) }
       val resp = client.send(builder.GET().build(),
         java.net.http.HttpResponse.BodyHandlers.ofString())

@@ -116,46 +116,54 @@ object XmlExtractor {
     var seq = 0
     val allMedia = ArrayBuffer.empty[(Int, String)] // (seq, ref)
 
-    private def slotBuf(m: java.util.IdentityHashMap[Elem, ArrayBuffer[MediaAnn]], e: Elem) = {
-      var b = m.get(e)
-      if (b == null) { b = ArrayBuffer.empty[MediaAnn]; m.put(e, b) }
-      b
-    }
-
-    /** Remove `node`, merging its tail into the previous sibling's tail or the
-      * parent's text exactly like `_remove_keeping_tail`
-      * (adsft/extraction.py:443-469), carrying media annotations along. If
-      * `mediaRef` is set, a media event is recorded at the junction point.
+    /** Remove every node of `killed` still attached under the root, as
+      * `_remove_keeping_tail` (adsft/extraction.py:443-469) does one by one:
+      * its tail merges into the previous surviving sibling's tail, or the
+      * parent's text, carrying media annotations along, and a `graphic`
+      * with an href records a media event at the junction point. `killed`
+      * is in document order ([[MiniPath.eval]]), so one cursor per parent
+      * walks its children once, and no later sibling has merged into a
+      * node's tail yet when it goes. Merged slots grow in builders, and
+      * each parent's children are compacted once at the end: linear time.
       */
-    def removeKeepingTail(node: Elem, mediaRef: Option[String]): Unit = {
-      val parent = node.parent
-      if (parent == null) return
-      val prev = node.getPrevious
-      val nodeTail = node.tail
-      val nodeTailAnns = Option(tailAnn.remove(node)).getOrElse(ArrayBuffer.empty)
+    def removeKeepingTail(killed: Seq[Elem]): Unit = {
+      final class Cursor(var next: Int, var prev: Elem)
+      val cursors = new java.util.IdentityHashMap[Elem, Cursor]()
+      val mergedText = new java.util.IdentityHashMap[Elem, java.lang.StringBuilder]()
+      val mergedTail = new java.util.IdentityHashMap[Elem, java.lang.StringBuilder]()
+      killed.foreach { node =>
+        val parent = node.parent
+        if (parent != null && node.attachedTo(root)) {
+          var c = cursors.get(parent)
+          if (c == null) { c = new Cursor(0, null); cursors.put(parent, c) }
+          val cs = parent.children
+          while (cs(c.next) ne node) { c.prev = cs(c.next); c.next += 1 }
+          c.next += 1
+          val prev = c.prev
 
-      // target slot + current base length
-      val (targetText, base) =
-        if (prev != null) (false, if (prev.tail == null) 0 else prev.tail.length)
-        else (true, if (parent.text == null) 0 else parent.text.length)
+          // target slot: the previous survivor's tail, else the parent's text
+          val (owner, value, merged, anns) =
+            if (prev != null) (prev, prev.tail, mergedTail, tailAnn) else (parent, parent.text, mergedText, textAnn)
+          val sb = merged.get(owner)
+          val base = if (sb != null) sb.length else if (value == null) 0 else value.length
 
-      val buf =
-        if (prev != null) slotBuf(tailAnn, prev)
-        else slotBuf(textAnn, parent)
+          if (node.tag == "graphic") node.attr("href").filter(_.nonEmpty).foreach { ref =>
+            anns.computeIfAbsent(owner, _ => ArrayBuffer.empty[MediaAnn]) += MediaAnn(base, seq, ref)
+            allMedia += ((seq, ref))
+            seq += 1
+          }
 
-      mediaRef.foreach { ref =>
-        buf += MediaAnn(base, seq, ref)
-        allMedia += ((seq, ref))
-        seq += 1
+          // the reference merges only a truthy tail (extraction.py:457)
+          if (node.tail != null && node.tail.nonEmpty) {
+            if (sb != null) sb.append(node.tail)
+            else merged.put(owner, new java.lang.StringBuilder(if (value == null) "" else value).append(node.tail))
+          }
+          node.parent = null
+        }
       }
-      nodeTailAnns.foreach(a => buf += a.copy(offset = base + a.offset))
-
-      // the reference merges only a truthy tail (extraction.py:457)
-      if (nodeTail != null && nodeTail.nonEmpty) {
-        if (prev != null) prev.tail = (if (prev.tail == null) "" else prev.tail) + nodeTail
-        else parent.text = (if (parent.text == null) "" else parent.text) + nodeTail
-      }
-      parent.removeChild(node)
+      cursors.keySet.forEach(p => p.children.filterInPlace(_.parent eq p))
+      mergedText.forEach((e, sb) => e.text = sb.toString)
+      mergedTail.forEach((e, sb) => e.tail = sb.toString)
     }
 
     /** Move a node after its parent (`_append_tag_outside_parent`,
@@ -258,13 +266,7 @@ object XmlExtractor {
     val surgeon = new Surgeon(root)
 
     // kill list, single doc-order evaluation (extraction.py:729-731)
-    val killed = MiniPath.eval(root, Rules.killList: _*)
-    killed.foreach { node =>
-      if (node.attachedTo(root)) {
-        val ref = if (node.tag == "graphic") node.attr("href").filter(_.nonEmpty) else None
-        surgeon.removeKeepingTail(node, ref)
-      }
-    }
+    surgeon.removeKeepingTail(MiniPath.eval(root, Rules.killList: _*))
 
     // acknowledgment relocation (always the xml rule set, extraction.py:733)
     MiniPath.eval(root, Rules.ackRelocate: _*).foreach { node =>

@@ -43,12 +43,6 @@ final class Elem(var tag: String) {
     parent.children.insert(i + 1, node)
   }
 
-  def getPrevious: Elem = {
-    if (parent == null) return null
-    val i = indexInParent
-    if (i > 0) parent.children(i - 1) else null
-  }
-
   def getNext: Elem = {
     if (parent == null) return null
     val i = indexInParent

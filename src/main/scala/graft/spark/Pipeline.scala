@@ -172,14 +172,28 @@ object Pipeline {
     */
   def runCommitted(spark: SparkSession, input: DataFrame, prevState: DataFrame,
       prevExtracted: Option[DataFrame], indexDate: java.sql.Timestamp,
+      runId: String, tableDir: String): Long =
+    commitRun(spark, input, None, prevState, prevExtracted, indexDate, runId, tableDir)
+
+  /** [[runCommitted]], plus `errorRows`: final error rows in [[ExtractedDoc]]
+    * shape, rejected before extraction (a multi-part doc flushed
+    * incomplete), committed in the same snapshot and counted in the sidecar.
+    * Re-extracting cannot change them, so they are resumed against every
+    * committed row of their doc: a replay does not commit them again, and
+    * they never supersede a committed success.
+    */
+  private[spark] def commitRun(spark: SparkSession, input: DataFrame,
+      errorRows: Option[DataFrame], prevState: DataFrame,
+      prevExtracted: Option[DataFrame], indexDate: java.sql.Timestamp,
       runId: String, tableDir: String): Long = {
-    val todo = SnapshotTable.read(spark, tableDir) match {
+    val committed = SnapshotTable.read(spark, tableDir)
+    val todo = committed match {
       // only SUCCESSFULLY extracted rows count as done: the reference's
       // skip-if-written protocol skips written fulltext only
       // (adsft/writer.py:152-156), so error-channel rows are retried on
       // every rerun; a later success supersedes the old error row in the
       // [[SnapshotTable.readCurrent]] merge-on-read view
-      case Some(committed) => resume(input, committed.filter(col("error").isNull))
+      case Some(done) => resume(input, done.filter(col("error").isNull))
       case None => input
     }
     // the todo count and the counters ride the sink action itself (observe
@@ -187,9 +201,11 @@ object Pipeline {
     val todoObs = Observation()
     val out = run(spark, todo.observe(todoObs, count(lit(1)).as("n")), prevState,
       prevExtracted, indexDate, runId).toDF()
-    val (observed, obs) = observeMetrics(out)
+    val rows = errorRows.fold(out)(errs => out.unionByName(committed.fold(errs)(resume(errs, _))))
+    val (observed, obs) = observeMetrics(rows)
     val snapshotId = SnapshotTable.commit(observed, tableDir)
-    if (todoObs.get("n") == 0L) -1L
+    // -1 only when neither a doc to extract nor an error row was left
+    if (todoObs.get("n") == 0L && obs.get("n_rows") == 0L) -1L
     else {
       writeSidecar(spark, s"$tableDir/metrics", metricsRows(obs.get), snapshotId, runId)
       snapshotId

@@ -51,7 +51,7 @@ object StreamingCurate {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         import spark.implicits._
-        val part = IngestStores.partitionKey(batch, batchId)
+        val part = IngestStores.partitionKey(batch, batchId, Seq("doc_id", "text"))
         val hashStore = IngestStores.readScoped(batch, s"$storeDir/hash", part,
           Seq("text_hash"), Seq.empty[String].toDF("text_hash"))
         val sigStore = IngestStores.readScoped(batch, s"$storeDir/sig", part,

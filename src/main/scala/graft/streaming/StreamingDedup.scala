@@ -92,7 +92,7 @@ object StreamingDedup {
         // delivery semantics shared with every store-backed ingest stage:
         // content-keyed idempotent partitions, own-partition-excluding
         // store reads, fail-loud on real read errors ([[IngestStores]])
-        val part = IngestStores.partitionKey(batch, batchId)
+        val part = IngestStores.partitionKey(batch, batchId, Seq("doc_id", "text"))
         val storeSig = IngestStores.readScoped(batch, sigDir, part,
           Seq("doc_id", "bucket"), Seq.empty[(Long, Long)].toDF("doc_id", "bucket"))
         val storeTexts = IngestStores.readScoped(batch, txtDir, part,

@@ -19,7 +19,8 @@ import graft.ops.Sketch
   * pure function of the batch's OWN content, so replay idempotence needs
   * no own-partition exclusion: a replayed batch rewrites its directory
   * with identical bytes no matter what else landed in the store since.
-  * The batch-id + content-XOR partition key is kept anyway so a
+  * The batch-id + content-XOR partition key
+  * ([[IngestStores.partitionKey]] over `valueCol`) is kept anyway so a
   * fresh-checkpoint restart (batch ids reset over different content)
   * lands on new directories instead of overwriting prior runs'.
   *
@@ -37,19 +38,10 @@ object StreamingSketch {
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // order-independent content key, same role as nearDupIngest's:
-        // replay overwrites its own directory; a fresh-checkpoint restart
-        // over different content lands elsewhere
-        val contentKey = {
-          val x = batch.select(
-            conv(substring(md5(col(valueCol).cast("string")), 1, 8), 16, 10)
-              .cast("long").as("_k"))
-            .agg(expr("bit_xor(_k)")).head().get(0)
-          if (x == null) "empty" else java.lang.Long.toHexString(x.asInstanceOf[Long])
-        }
+        val part = IngestStores.partitionKey(batch, batchId, Seq(valueCol))
         Sketch.kmvSketch(batch, col(valueCol), k)
           .write.mode("overwrite")
-          .parquet(s"$storeDir/batch=$batchId-$contentKey")
+          .parquet(s"$storeDir/batch=$part")
         ()
       }
       .start()

@@ -68,6 +68,27 @@ class HttpExtractorSpec extends AnyFunSuite {
     assert(r == Left("http transport error: IOException: reset"))
   }
 
+  test("a server that accepts and never answers is a transport error within the timeout") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val server = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress(java.net.InetAddress.getLoopbackAddress, 0), 0)
+    server.createContext("/", _ => release.await()) // read the request, never respond
+    server.start()
+    try {
+      val url = s"http://127.0.0.1:${server.getAddress.getPort}/doc"
+      val t0 = System.nanoTime()
+      // the deadline turns a hang into a failure instead of a stuck suite
+      val r = Await.result(Future(HttpExtractor.extract(url,
+        HttpExtractor.transport(java.time.Duration.ofMillis(300)))), 30.seconds)
+      val sec = (System.nanoTime() - t0) / 1e9
+      assert(r.isLeft && r.swap.toOption.get.startsWith("http transport error: HttpTimeoutException"), r)
+      assert(sec < 10.0, f"took $sec%.2f s")
+    } finally { release.countDown(); server.stop(0) }
+  }
+
   test("dispatcher: pre-fetched http doc (payload spans) cleans like txt, no fetch") {
     val transport: HttpExtractor.Transport =
       (_, _) => throw new AssertionError("must not fetch")

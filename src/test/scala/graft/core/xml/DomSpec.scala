@@ -6,7 +6,8 @@ import graft.core.{Dispatcher, Doc, Span}
 
 /** `Dom.parse` recovery: a mismatched end tag closes the open elements down
   * to its nearest open namesake, an end tag with no open namesake is
-  * ignored, and both stay linear in the number of tags.
+  * ignored, and both stay linear in the number of tags. The XML kill list
+  * removes its nodes keeping their tails, also in linear time.
   */
 class DomSpec extends AnyFunSuite {
 
@@ -54,6 +55,28 @@ class DomSpec extends AnyFunSuite {
     val got = Dispatcher.extract(jats(20000))
     val sec = (System.nanoTime() - t0) / 1e9
     assert(got.isRight)
+    assert(sec < 2.0, f"took $sec%.2f s")
+  }
+
+  private def jatsBody(body: String) = Doc("D1", "xml", "ADS", "/s/D1.xml",
+    Vector(Span("raw", "<article><body>" + body + "</body></article>", null, 0)), null, null)
+
+  test("killed nodes leave their tails to the previous survivor or the parent, media events in place") {
+    val got = Dispatcher.extract(jatsBody("<p>a<inline-formula>f</inline-formula>b" +
+      "<graphic href=\"g1.gif\"/>c<i>x</i>d<graphic href=\"g2.gif\"/>e" +
+      "<table><graphic href=\"g3\"/>t</table>z</p>")).toOption.get
+    assert(got.fulltext == "abc x dez")
+    assert(got.spans == Vector(Span("text", "ab", null, 0), Span("media", null, "g1.gif", 1),
+      Span("text", "c x d", null, 2), Span("media", null, "g2.gif", 3), Span("text", "ez", null, 4)))
+  }
+
+  test("80k killed <inline-formula> siblings in one <p> extract in under 2 s") {
+    def doc(n: Int) = jatsBody("<p>a" + "<inline-formula>f</inline-formula> w" * n + "</p>")
+    assert(Dispatcher.extract(doc(100)).map(_.fulltext) == Right("a" + " w" * 100))
+    val t0 = System.nanoTime()
+    val got = Dispatcher.extract(doc(80000))
+    val sec = (System.nanoTime() - t0) / 1e9
+    assert(got.map(_.fulltext.length) == Right(160001))
     assert(sec < 2.0, f"took $sec%.2f s")
   }
 }

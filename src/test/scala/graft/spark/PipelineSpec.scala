@@ -2,6 +2,7 @@ package graft.spark
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Span
@@ -205,25 +206,57 @@ class PipelineSpec extends AnyFunSuite {
     assert(written.count() == 21)
   }
 
-  test("streaming backpressure: maxFilesPerTrigger=1 bounds each micro-batch (Q3)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bp").toString
+  /** Waits for an AvailableNow query to end on its own, and stops it
+    * either way, so no query outlives its test.
+    */
+  private def drain(q: StreamingQuery): Unit = {
+    try assert(q.awaitTermination(120000), "the AvailableNow query did not terminate")
+    finally q.stop()
+    assert(!q.isActive)
+  }
+
+  private def committed(outDir: String) = SnapshotTable.read(spark, outDir).get
+
+  private def runIds(outDir: String): Set[String] = {
+    import spark.implicits._
+    spark.read.parquet(s"$outDir/metrics").select("run_id").as[String].collect().toSet
+  }
+
+  /** Streams 60 checker docs in three input files, one per micro-batch
+    * (`maxFilesPerTrigger = 1`), into a fresh table; returns (inDir,
+    * outDir, cpDir).
+    */
+  private def streamThreeBatches(name: String): (String, String, String) = {
+    val tmp = java.nio.file.Files.createTempDirectory(name).toString
     val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val cpDir = s"$tmp/cp"
-    val input = SpanGen.checkerDocs(spark, dir).toDF().limit(60)
-    // three separate input files -> three trigger units
-    input.repartition(3).write.parquet(inDir)
+    SpanGen.checkerDocs(spark, dir).toDF().limit(60).repartition(3).write.parquet(inDir)
+    drain(StreamingPipeline.run(spark, inDir, outDir, cpDir,
+      SpanGen.prevState(spark, dir), ts, maxFilesPerTrigger = Some(1)))
+    (inDir, outDir, cpDir)
+  }
+
+  /** Every committed row is the only one of its doc, raw history included. */
+  private def assertOneRowPerDoc(outDir: String): Unit = {
+    val all = committed(outDir)
+    assert(all.count() == all.select("doc_id").distinct().count())
+    assert(SnapshotTable.readCurrent(spark, outDir).get.count() == all.count())
+  }
+
+  test("streaming backpressure: maxFilesPerTrigger=1 bounds each micro-batch (Q3)") {
+    val (inDir, outDir, cpDir) = streamThreeBatches("graft-bp")
     assert(new java.io.File(inDir).listFiles().count(_.getName.endsWith(".parquet")) >= 3)
-    val prev = SpanGen.prevState(spark, dir)
-    val q = StreamingPipeline.run(spark, inDir, outDir, cpDir, prev, ts,
-      maxFilesPerTrigger = Some(1))
-    q.awaitTermination(120000)
-    // one file per trigger -> at least 3 committed micro-batches
+    // one file per trigger -> at least 3 committed micro-batches; each one
+    // that extracted something is its own snapshot with its own sidecar rows
     val batches = new java.io.File(s"$cpDir/commits").listFiles()
       .count(f => f.getName.forall(_.isDigit))
     assert(batches >= 3, s"expected >=3 micro-batches, got $batches")
+    val ids = runIds(outDir)
+    assert(ids.size == SnapshotTable.history(spark, outDir).size)
+    assert(ids.forall(_.startsWith("stream-")), ids)
     // and the chunked result equals the batch run
-    val streamed = spark.read.parquet(outDir).select("doc_id", "fulltext")
-    val batch = Pipeline.run(spark, spark.read.parquet(inDir), prev, None, ts, "bp")
-      .toDF().select("doc_id", "fulltext")
+    val streamed = committed(outDir).select("doc_id", "fulltext")
+    val batch = Pipeline.run(spark, spark.read.parquet(inDir), SpanGen.prevState(spark, dir),
+      None, ts, "bp").toDF().select("doc_id", "fulltext")
     assert(streamed.exceptAll(batch).count() == 0)
     assert(batch.exceptAll(streamed).count() == 0)
   }
@@ -232,17 +265,18 @@ class PipelineSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft-ddpipe").toString
     val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val cpDir = s"$tmp/cp"
     val input = SpanGen.checkerDocs(spark, dir).toDF().limit(40).cache()
-    // wave 1: 40 docs; wave 2 (later micro-batch): 15 of them REDELIVERED
-    // verbatim — the at-least-once upstream retry shape
-    input.coalesce(1).write.mode("append").parquet(inDir)
+    // wave 1: 40 docs with 10 of them REDELIVERED verbatim in the same file
+    // (so in the same micro-batch, where only the dedup can catch them);
+    // wave 2 (a later micro-batch): 15 of them redelivered again — the
+    // at-least-once upstream retry shape
+    input.unionAll(input.limit(10)).coalesce(1).write.mode("append").parquet(inDir)
     Thread.sleep(100)
     input.limit(15).coalesce(1).write.mode("append").parquet(inDir)
     val prev = SpanGen.prevState(spark, dir)
-    val q = StreamingPipeline.run(spark, inDir, outDir, cpDir, prev, ts,
+    drain(StreamingPipeline.run(spark, inDir, outDir, cpDir, prev, ts,
       maxFilesPerTrigger = Some(1),
-      dedupWithin = Some("1 hour"))
-    q.awaitTermination(120000)
-    val streamed = spark.read.parquet(outDir).select("doc_id", "fulltext")
+      dedupWithin = Some("1 hour")))
+    val streamed = committed(outDir).select("doc_id", "fulltext")
     // exactly the single-delivery batch result: nothing extracted twice
     assert(streamed.count() == streamed.select("doc_id").distinct().count())
     val batch = Pipeline.run(spark, input, prev, None, ts, "dd")
@@ -257,13 +291,39 @@ class PipelineSpec extends AnyFunSuite {
     val input = SpanGen.checkerDocs(spark, dir).toDF().limit(80)
     input.write.parquet(inDir)
     val prev = SpanGen.prevState(spark, dir)
-    val q = StreamingPipeline.run(spark, inDir, outDir, cpDir, prev, ts)
-    q.awaitTermination(120000)
-    val streamed = spark.read.parquet(outDir).select("doc_id", "fulltext")
+    drain(StreamingPipeline.run(spark, inDir, outDir, cpDir, prev, ts))
+    val streamed = committed(outDir).select("doc_id", "fulltext")
     val batch = Pipeline.run(spark, spark.read.parquet(inDir), prev, None, ts, "t6")
       .toDF().select("doc_id", "fulltext")
     assert(streamed.exceptAll(batch).count() == 0)
     assert(batch.exceptAll(streamed).count() == 0)
+  }
+
+  test("streaming replay: a batch replayed under its checkpoint commits nothing new") {
+    val (inDir, outDir, cpDir) = streamThreeBatches("graft-replay")
+    val history = SnapshotTable.history(spark, outDir)
+    val rows = committed(outDir).count()
+    // drop the last batch's commit record: the restart replays that batch
+    val last = new java.io.File(s"$cpDir/commits").list().filter(_.forall(_.isDigit)).map(_.toInt).max
+    Seq(s"$last", s".$last.crc").foreach(n => new java.io.File(s"$cpDir/commits/$n").delete())
+    drain(StreamingPipeline.run(spark, inDir, outDir, cpDir,
+      SpanGen.prevState(spark, dir), ts, maxFilesPerTrigger = Some(1)))
+    assert(new java.io.File(s"$cpDir/commits/$last").exists()) // the batch did run again
+    assert(SnapshotTable.history(spark, outDir) == history)
+    assert(committed(outDir).count() == rows)
+    assertOneRowPerDoc(outDir)
+  }
+
+  test("streaming fresh checkpoint: a restart over the same input and table commits nothing new") {
+    val (inDir, outDir, cpDir) = streamThreeBatches("graft-freshcp")
+    val history = SnapshotTable.history(spark, outDir)
+    val rows = committed(outDir).count()
+    drain(StreamingPipeline.run(spark, inDir, outDir, s"$cpDir-fresh",
+      SpanGen.prevState(spark, dir), ts, maxFilesPerTrigger = Some(1)))
+    assert(new java.io.File(s"$cpDir-fresh/commits/0").exists())
+    assert(SnapshotTable.history(spark, outDir) == history)
+    assert(committed(outDir).count() == rows)
+    assertOneRowPerDoc(outDir)
   }
 }
 

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Dispatcher, Doc}
 import graft.gen.Synth
-import graft.spark.SparkTestSession
+import graft.spark.{SnapshotTable, SparkTestSession, StreamingPipeline}
 import graft.streaming.MultipartAssembly.PartRow
 
 /** Stateful streaming assembly (flatMapGroupsWithState) and watermarked
@@ -111,45 +111,107 @@ class MultipartStreamingSpec extends AnyFunSuite {
     assert(done.complete && done.spans.map(_.text) == Seq("alpha", "beta", "gamma"))
   }
 
-  test("runParts: assembly -> extraction -> sink under one checkpoint, incomplete docs to error channel") {
+  private val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
+
+  /** Three waves of part files for 20 two-part docs: all second parts,
+    * then the first parts of every doc but one (the stuck doc, whose
+    * part 0 never arrives), then an unrelated single-part doc. Returns the
+    * parts and the stuck doc's id.
+    */
+  private def writePartWaves(inDir: String): (Seq[PartRow], String) = {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-runparts").toString
-    val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val cpDir = s"$tmp/cp"
     val parts = partRows(20)
-    val stuckId = parts.head.doc_id // its part 0 never arrives
+    val stuckId = parts.head.doc_id
     // wave 1: all second parts — nothing can complete yet
     parts.filter(_.part_index == 1).toDS().coalesce(1)
       .write.mode("append").parquet(inDir)
     Thread.sleep(100)
-    // wave 2: first parts for every doc but the stuck one
+    // wave 2: first parts for every doc but the stuck one; the stuck doc's
+    // 1 ms processing-time timeout has expired by this batch, so it is
+    // flushed next to the 19 docs this batch completes
     parts.filter(p => p.part_index == 0 && p.doc_id != stuckId).toDS().coalesce(1)
       .write.mode("append").parquet(inDir)
     Thread.sleep(100)
-    // wave 3: an unrelated single-part doc; its batch runs after the stuck
-    // doc's processing-time timeout expired, triggering the flush
+    // wave 3: an unrelated single-part doc
     Seq(PartRow("D9999991", "txt", "ADS", "/s/D9999991.txt", 0, 1, "tail doc words here"))
       .toDS().coalesce(1).write.mode("append").parquet(inDir)
+    (parts, stuckId)
+  }
 
+  /** runParts with the 1 ms incomplete timeout, one file per micro-batch,
+    * on a ProcessingTime trigger (a timeout rules out AvailableNow). Such a
+    * query never ends on its own: it runs until `outDir` holds `rows`
+    * committed rows and `done` holds, then until one more batch has gone
+    * through the checkpoint (so the batch that committed them has written
+    * its sidecar row too), and is then stopped, all within a deadline.
+    */
+  private def runPartsUntil(inDir: String, outDir: String, cpDir: String, rows: Long)(
+      done: => Boolean = true): Unit = {
     val prev = graft.gen.SpanGen.prevState(spark, dir).limit(0) // all NOT_EXTRACTED_BEFORE
-    val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
-    val q = graft.spark.StreamingPipeline.runParts(
-      spark, inDir, outDir, cpDir, prev, ts,
+    val q = StreamingPipeline.runParts(spark, inDir, outDir, cpDir, prev, ts,
       incompleteTimeoutMs = Some(1L),
+      trigger = Trigger.ProcessingTime("100 milliseconds"),
       maxFilesPerTrigger = Some(1))
-    q.awaitTermination(180000)
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    def await(what: String)(cond: => Boolean): Unit =
+      while (!cond) {
+        q.exception.foreach(e => throw e)
+        assert(System.nanoTime() < deadline, s"$what within 60 s")
+        Thread.sleep(100)
+      }
+    def lastCommit = Option(new java.io.File(s"$cpDir/commits").list()).toSeq.flatten
+      .filter(_.forall(_.isDigit)).map(_.toInt).maxOption.getOrElse(-1)
+    try {
+      await(s"$rows rows committed")(SnapshotTable.committedRows(spark, outDir) >= rows && done)
+      val last = lastCommit
+      await("one more batch checkpointed")(lastCommit > last)
+    } finally q.stop()
+    assert(!q.isActive)
+  }
 
-    val out = spark.read.parquet(outDir)
+  /** doc_id -> the snapshot that first committed it. */
+  private def firstSnapshot(outDir: String): Map[String, Long] = {
+    import spark.implicits._
+    SnapshotTable.history(spark, outDir).map(_._1).foldLeft(Map.empty[String, Long]) { (m, s) =>
+      val ids = SnapshotTable.readAt(spark, outDir, s).get.select("doc_id").as[String].collect()
+      m ++ ids.filterNot(m.contains).map(_ -> s)
+    }
+  }
+
+  test("runParts: assembly -> extraction -> sink under one checkpoint, incomplete docs to error channel") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-runparts").toString
+    val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val cpDir = s"$tmp/cp"
+    val (parts, stuckId) = writePartWaves(inDir)
+    runPartsUntil(inDir, outDir, cpDir, rows = 21)()
+
+    val out = SnapshotTable.read(spark, outDir).get
     // 19 two-part docs + 1 single-part doc extracted; the stuck doc flushed
     // as ONE incomplete error row; everything exactly once
     assert(out.count() == 21, s"got ${out.count()} rows")
     assert(out.select("doc_id").distinct().count() == 21)
     val errs = out.filter(col("error").isNotNull)
-      .select("doc_id", "error").as[(String, String)].collect()
+      .select("doc_id", "error", "lineage").as[(String, String, String)].collect()
     assert(errs.map(_._1).toSeq == Seq(stuckId), errs.mkString(", "))
     assert(errs.head._2.contains("multipart incomplete"))
     val good = out.filter(col("error").isNull)
     assert(good.count() == 20)
     assert(good.filter(length(col("fulltext")) > 0).count() == 20)
+    // the incomplete row landed in the same snapshot as the rows its batch
+    // extracted, and that batch's sidecar row counts it as errored
+    val batchRun = errs.head._3.stripSuffix(s"/$stuckId")
+    val sameBatch = good.filter(col("lineage").startsWith(s"$batchRun/"))
+      .select("doc_id").as[String].collect()
+    assert(sameBatch.nonEmpty, s"$batchRun extracted nothing")
+    val snap = firstSnapshot(outDir)
+    assert(sameBatch.forall(id => snap(id) == snap(stuckId)), snap)
+    val sidecar = spark.read.parquet(s"$outDir/metrics")
+      .select("run_id", "format", "n_extracted", "n_errored", "snapshot_id")
+      .as[(String, String, Long, Long, Long)].collect()
+    assert(sidecar.forall(_._1.startsWith("parts-")), sidecar.mkString(", "))
+    assert(sidecar.toSeq.contains((batchRun, "txt", sameBatch.length.toLong, 1L, snap(stuckId))),
+      sidecar.mkString(", "))
+    assert(sidecar.map(_._4).sum == 1L && sidecar.map(_._3).sum == 20L)
     // extraction equivalence: the streamed path produces the same fulltext
     // as the batch pipeline over batch-assembled docs for a sample doc
     val sample = parts.filter(p => p.doc_id != stuckId).head.doc_id
@@ -162,6 +224,47 @@ class MultipartStreamingSpec extends AnyFunSuite {
     val gotFt = good.filter(col("doc_id") === sample)
       .select("fulltext").as[String].head()
     assert(gotFt == expectFt)
+  }
+
+  test("runParts replay: a replayed batch that flushed an incomplete doc does not commit its error row again") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-partsreplay").toString
+    val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val cpDir = s"$tmp/cp"
+    val (_, stuckId) = writePartWaves(inDir)
+    runPartsUntil(inDir, outDir, cpDir, rows = 21)()
+    val history = SnapshotTable.history(spark, outDir)
+    val lineage = SnapshotTable.read(spark, outDir).get
+      .filter(col("doc_id") === stuckId).select("lineage").as[String].head()
+    val b = lineage.stripPrefix("parts-").stripSuffix(s"/$stuckId").toInt
+
+    // rewind the checkpoint to just before batch b committed: the restart
+    // replays batch b from its offsets (same batch timestamp, so the same
+    // timeout flush), then plans the batches after it anew
+    def batchFiles(sub: String) = new java.io.File(s"$cpDir/$sub").listFiles().toSeq
+      .map(f => f -> f.getName.stripPrefix(".").stripSuffix(".crc"))
+      .collect { case (f, n) if n.nonEmpty && n.forall(_.isDigit) => (f, n.toInt) }
+    batchFiles("commits").foreach { case (f, n) => if (n >= b) f.delete() }
+    batchFiles("offsets").foreach { case (f, n) => if (n > b) f.delete() }
+    runPartsUntil(inDir, outDir, cpDir, rows = 21) {
+      new java.io.File(s"$cpDir/commits/${b + 1}").exists()
+    }
+
+    // the replay committed nothing: its extracted docs were already done,
+    // and the incomplete doc's error row is final, so it stays the one
+    // committed row of that doc
+    assert(SnapshotTable.history(spark, outDir) == history)
+    val out = SnapshotTable.read(spark, outDir).get
+    assert(out.count() == 21 && out.select("doc_id").distinct().count() == 21)
+    val current = SnapshotTable.readCurrent(spark, outDir).get.filter(col("doc_id") === stuckId)
+      .select("error").as[String].collect()
+    assert(current.length == 1 && current.head.contains("multipart incomplete"))
+  }
+
+  test("runParts rejects an incomplete timeout under an AvailableNow trigger") {
+    val e = intercept[IllegalArgumentException](StreamingPipeline.runParts(
+      spark, "/nonexistent", "/nonexistent", "/nonexistent", spark.emptyDataFrame, ts,
+      incompleteTimeoutMs = Some(1L)))
+    assert(e.getMessage.contains("AvailableNow"))
   }
 
   test("windowed metrics: watermark finalizes old windows, state stays bounded") {

@@ -55,6 +55,26 @@ class StreamingSketchSpec extends AnyFunSuite {
       .as[(Long, Long, Long)].head() == want)
   }
 
+  test("fresh-checkpoint runs over batches that differ only in a null value land in different partitions") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-sketchnull").toString
+    val store = s"$tmp/store"
+    // two one-batch runs, each on its own checkpoint, so both are batch 0:
+    // only the content key can tell them apart
+    def ingest(name: String, rows: Seq[(Long, String)]): Unit = {
+      val inDir = s"$tmp/in-$name"
+      rows.toDF("doc_id", "text").coalesce(1).write.parquet(inDir)
+      val q = StreamingSketch.distinctIngest(
+        spark.readStream.schema(spark.read.parquet(inDir).schema).parquet(inDir),
+        store, s"$tmp/cp-$name", k = 8)
+      try q.processAllAvailable() finally q.stop()
+    }
+    ingest("a", Seq((1L, "alpha"), (2L, "beta")))
+    ingest("b", Seq((1L, "alpha"), (2L, "beta"), (3L, null)))
+    val parts = new java.io.File(store).list().filter(_.startsWith("batch=")).sorted.toSeq
+    assert(parts.size == 2 && parts.forall(_.startsWith("batch=0-")), parts)
+  }
+
   test("missing store reads as zero distinct") {
     import spark.implicits._
     val out = StreamingSketch.readDistinct(
