@@ -13,7 +13,10 @@ import org.apache.spark.sql.functions._
   * future re-deliveries arrive raw, so the store must fingerprint raw.
   *
   * Append contract (what a daily-ingest driver does after each batch):
-  * hashDelta -> the exact-hash store, sigDelta -> the MinHash band store,
+  * hashDelta -> the exact-hash store, (doc_id, text_hash): the batch reads
+  * only `text_hash`, and the doc id lets a replay tell which store rows
+  * its own earlier attempt left ([[graft.streaming.StreamingCurate]]);
+  * sigDelta -> the MinHash band store,
   * textDelta -> the verification text relation, embSigDelta/embVecDelta ->
   * the embedding LSH store (present only when the batch carried
   * embeddings). Appending is replay-idempotent: re-running the SAME batch
@@ -148,10 +151,11 @@ object Curate {
     * ([[IncrementalCuration]]) are what the driver appends to the stores
     * so tomorrow's batch sees today's keepers.
     *
-    * Store contracts: `hashStore` holds `md5(normalizeForDedup(text))` of
-    * every stored doc (exactly what [[IncrementalCuration.hashDelta]]
-    * emits); `sigStore` is the accumulated [[Dedup.signBands]] table over
-    * raw stored text; `storeTexts` is (doc_id, text) for candidate
+    * Store contracts: `hashStore` holds `text_hash` =
+    * `md5(normalizeForDedup(text))` of every stored doc (the column
+    * [[IncrementalCuration.hashDelta]] emits beside `doc_id`; other columns
+    * are ignored); `sigStore` is the accumulated [[Dedup.signBands]] table
+    * over raw stored text; `storeTexts` is (doc_id, text) for candidate
     * verification; the embedding stores mirror [[Dedup.signEmbeddings]] /
     * (vec_id, embedding) with vec_id == doc_id. Batch ids must be numeric
     * (fail-fast, inherited from [[curate]]); embedding stage parameters
@@ -261,7 +265,7 @@ object Curate {
     val keptIds = docs.filter(col("status") === "kept").select("doc_id")
     val keptDocs = base.join(keptIds, Seq("doc_id")).select("doc_id", "text")
     val hashDelta = keptDocs
-      .select(md5(Dedup.normalizeForDedup(col("text"))).as("text_hash"))
+      .select(col("doc_id"), md5(Dedup.normalizeForDedup(col("text"))).as("text_hash"))
     val sigDelta = Dedup.signBands(keptDocs, n, bands, rowsPerBand)
     val (embSigDelta, embVecDelta) =
       if (!embStage) (None, None)

@@ -46,6 +46,15 @@ object SnapshotTable {
     */
   def commit(df: DataFrame, tableDir: String): Long = append(df, tableDir, replace = false)
 
+  /** [[commit]] only the rows of `df` whose `key` the table does not hold
+    * yet, so a commit repeated after it already landed appends nothing.
+    * The store-backed streaming stages commit their store deltas through
+    * this.
+    */
+  private[graft] def commitNew(df: DataFrame, tableDir: String, key: String): Long =
+    commit(read(df.sparkSession, tableDir)
+      .fold(df)(t => df.join(t.select(key), Seq(key), "left_anti")), tableDir)
+
   /** Replace the table content with `df` (insert-overwrite semantics):
     * the new manifest lists only the new files; old data files become
     * unreferenced (snapshot history still names them).

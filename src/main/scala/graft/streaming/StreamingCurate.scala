@@ -4,29 +4,29 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.Curate
+import graft.spark.{Pipeline, SnapshotTable}
 
 /** The curation capstone as a CONTINUOUS ingest stage — the streaming
   * realization of [[graft.ops.Curate.curateIncremental]]'s daily-crawl
   * contract: every micro-batch is curated against the standing corpus
   * stores (exact hash, MinHash band signatures, verification texts), every
-  * document's fate is written per batch, and the keepers' fingerprints are
+  * document's fate is committed per batch, and the keepers' fingerprints are
   * appended so the NEXT micro-batch dedups against them. The stores live
-  * on disk (parquet dirs under `storeDir`), not in streaming state: the
+  * on disk (tables under `storeDir`), not in streaming state: the
   * store IS the state, unbounded by design, and a restart resumes from
   * the data with no checkpointed aggregation to rebuild.
   *
-  * Delivery semantics are [[StreamingDedup.nearDupIngest]]'s, through the
-  * same [[IngestStores]] machinery: batch-content-keyed partitions make
-  * replays overwrite themselves with identical deterministic bytes; the
-  * store reads exclude the batch's own partition so a replay cannot mark
-  * itself duplicate; real store read failures fail the batch (Spark
-  * retries) instead of silently releasing duplicates.
+  * Delivery semantics are [[StreamingDedup.nearDupIngest]]'s, with
+  * `outDir` as the output: every table is a [[graft.spark.SnapshotTable]],
+  * the batch is resumed against the output, so a doc gets one fate however
+  * often it is delivered, and the output commit is the batch's commit
+  * point.
   *
-  * Outputs per micro-batch, each under `batch=<id>-<contentKey>`:
-  * `outDir` — (doc_id, status, split, text): every batch doc exactly once,
-  * status in {kept, exact_dup, near_dup, low_quality, empty}, scrubbed
-  * release text + leakage-safe split for the keepers; `storeDir/hash`,
-  * `storeDir/sig`, `storeDir/texts` — the keeper deltas. The embedding
+  * Tables, read with `SnapshotTable.read`: `outDir` — (doc_id, status,
+  * split, text): every batch doc exactly once, status in {kept, exact_dup,
+  * near_dup, low_quality, empty}, scrubbed release text + leakage-safe
+  * split for the keepers; `storeDir/hash`, `storeDir/sig`,
+  * `storeDir/texts` — the keeper deltas. The embedding
   * modality stays batch-side ([[graft.ops.Curate.curateIncremental]]'s
   * optional stores): a stream carrying embeddings composes the same way,
   * it just needs its vec store dirs threaded through.
@@ -48,24 +48,23 @@ object StreamingCurate {
       maxBucket: Int = 64): StreamingQuery = {
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
         import spark.implicits._
-        val part = IngestStores.partitionKey(batch, batchId, Seq("doc_id", "text"))
-        val hashStore = IngestStores.readScoped(batch, s"$storeDir/hash", part,
-          Seq("text_hash"), Seq.empty[String].toDF("text_hash"))
-        val sigStore = IngestStores.readScoped(batch, s"$storeDir/sig", part,
-          Seq("doc_id", "bucket"), Seq.empty[(Long, Long)].toDF("doc_id", "bucket"))
-        val storeTexts = IngestStores.readScoped(batch, s"$storeDir/texts", part,
-          Seq("doc_id", "text"), Seq.empty[(Long, String)].toDF("doc_id", "text"))
-        val r = Curate.curateIncremental(batch, hashStore, sigStore, storeTexts,
+        val todo = SnapshotTable.read(spark, outDir).fold(batch)(Pipeline.resume(batch, _))
+        def store(name: String, empty: => DataFrame) =
+          SnapshotTable.read(spark, s"$storeDir/$name").fold(empty)(Pipeline.resume(_, todo))
+        val r = Curate.curateIncremental(todo,
+          store("hash", Seq.empty[(Long, String)].toDF("doc_id", "text_hash")),
+          store("sig", Seq.empty[(Long, Long)].toDF("doc_id", "bucket")),
+          store("texts", Seq.empty[(Long, String)].toDF("doc_id", "text")),
           expectedBatchItems, splits = splits, tau = tau,
           coherenceCol = coherenceCol, n = n, bands = bands,
           rowsPerBand = rowsPerBand, maxBucket = maxBucket)
-        r.docs.write.mode("overwrite").parquet(s"$outDir/batch=$part")
-        r.hashDelta.write.mode("overwrite").parquet(s"$storeDir/hash/batch=$part")
-        r.sigDelta.write.mode("overwrite").parquet(s"$storeDir/sig/batch=$part")
-        r.textDelta.write.mode("overwrite").parquet(s"$storeDir/texts/batch=$part")
+        SnapshotTable.commitNew(r.hashDelta, s"$storeDir/hash", "doc_id")
+        SnapshotTable.commitNew(r.sigDelta, s"$storeDir/sig", "doc_id")
+        SnapshotTable.commitNew(r.textDelta, s"$storeDir/texts", "doc_id")
+        SnapshotTable.commit(r.docs, outDir)
         ()
       }
       .start()

@@ -4,6 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.ops.Dedup
+import graft.spark.{Pipeline, SnapshotTable}
+
 /** Exact content dedup as a STREAMING stage — the continuous analog of
   * `ops.Dedup.incrementalExact` for a pipeline whose corpus arrives as an
   * unbounded stream (the reference consumes a queue, adsft/app.py; a crawl
@@ -54,19 +57,24 @@ object StreamingDedup {
     * every micro-batch is checked against the standing band-signature
     * store, only the novel documents are released, and the novel docs'
     * signatures + texts are appended to the store so the NEXT batch
-    * dedups against them. The store lives on disk (parquet dirs under
+    * dedups against them. The store lives on disk (tables under
     * `storeDir`), not in streaming state: the store IS the state, it is
     * unbounded by design (the corpus grows), and a restart resumes from
     * the data with no checkpointed aggregation to rebuild.
     *
-    * Delivery semantics: every write is keyed by the micro-batch id PLUS
-    * an order-independent content hash of the batch
-    * (`batch=<id>-<xor>` subdirectory, overwrite) — a replayed batch
-    * after a crash rewrites ITS OWN directories with identical
-    * deterministic content (idempotent without a transactional store),
-    * while a fresh-checkpoint restart whose batch ids reset over
-    * different content lands on NEW directories instead of overwriting
-    * prior runs' partitions.
+    * Delivery semantics: `keptDir` and the stores are
+    * [[graft.spark.SnapshotTable]]s, and rows land only through
+    * `SnapshotTable.commit`. The batch is first resumed against `keptDir`
+    * ([[graft.spark.Pipeline.resume]]). Store reads then drop the rows of
+    * that to-do set: only a crashed earlier attempt at this batch can have
+    * left them, and a replay must not mark itself duplicate. The store
+    * deltas commit first, each only with the doc ids its store does not
+    * hold yet, and `keptDir` last, so its commit is the batch's commit
+    * point: a replayed batch or a fresh-checkpoint restart over the same
+    * tables commits nothing new. A real store read failure fails the batch
+    * (Spark retries); only a store with no committed snapshot reads as
+    * empty.
+    *
     * Within-batch near-dup pairs pass through (the horizon is
     * batch-vs-STORE, mirroring [[dedupStream]]'s watermark trade);
     * chain them with [[dedupStream]] or a batch
@@ -84,29 +92,24 @@ object StreamingDedup {
       tau: Double = 0.85, maxBucket: Int = 64): StreamingQuery = {
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val sigDir = s"$storeDir/sig"
-        val txtDir = s"$storeDir/texts"
         import spark.implicits._
-        // delivery semantics shared with every store-backed ingest stage:
-        // content-keyed idempotent partitions, own-partition-excluding
-        // store reads, fail-loud on real read errors ([[IngestStores]])
-        val part = IngestStores.partitionKey(batch, batchId, Seq("doc_id", "text"))
-        val storeSig = IngestStores.readScoped(batch, sigDir, part,
-          Seq("doc_id", "bucket"), Seq.empty[(Long, Long)].toDF("doc_id", "bucket"))
-        val storeTexts = IngestStores.readScoped(batch, txtDir, part,
-          Seq("doc_id", "text"), Seq.empty[(Long, String)].toDF("doc_id", "text"))
-        val dups = graft.ops.Dedup.incrementalMinhash(
-          batch, storeSig, storeTexts, n, bands, rowsPerBand, tau, maxBucket)
-        val novel = batch
+        val todo = SnapshotTable.read(spark, keptDir).fold(batch)(Pipeline.resume(batch, _))
+        def store(name: String, empty: => DataFrame) =
+          SnapshotTable.read(spark, s"$storeDir/$name").fold(empty)(Pipeline.resume(_, todo))
+        val dups = Dedup.incrementalMinhash(todo,
+          store("sig", Seq.empty[(Long, Long)].toDF("doc_id", "bucket")),
+          store("texts", Seq.empty[(Long, String)].toDF("doc_id", "text")),
+          n, bands, rowsPerBand, tau, maxBucket)
+        val novel = todo
           .join(dups.select("doc_id"), Seq("doc_id"), "left_anti")
           .localCheckpoint() // three consumers below; pin one evaluation
-        novel.write.mode("overwrite").parquet(s"$keptDir/batch=$part")
-        graft.ops.Dedup.signBands(novel, n, bands, rowsPerBand)
-          .write.mode("overwrite").parquet(s"$sigDir/batch=$part")
-        novel.selectExpr("cast(doc_id as long) as doc_id", "text")
-          .write.mode("overwrite").parquet(s"$txtDir/batch=$part")
+        SnapshotTable.commitNew(Dedup.signBands(novel, n, bands, rowsPerBand),
+          s"$storeDir/sig", "doc_id")
+        SnapshotTable.commitNew(novel.selectExpr("cast(doc_id as long) as doc_id", "text"),
+          s"$storeDir/texts", "doc_id")
+        SnapshotTable.commit(novel, keptDir)
         ()
       }
       .start()

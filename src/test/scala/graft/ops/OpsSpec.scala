@@ -2210,7 +2210,7 @@ class OpsSpec extends AnyFunSuite {
     // (106 flips from within-batch to vs-store near-dup — same status),
     // and nothing new enters the store
     val r2 = Curate.curateIncremental(batch,
-      hashStore.unionAll(r1.hashDelta), sigStore.unionAll(r1.sigDelta),
+      hashStore.unionAll(r1.hashDelta.select("text_hash")), sigStore.unionAll(r1.sigDelta),
       store.unionAll(r1.textDelta),
       expectedBatchItems = 16, batchEmb = Some(batchEmb),
       embSigStore = Some(embSigStore.unionAll(r1.embSigDelta.get)),
@@ -2360,14 +2360,14 @@ class OpsSpec extends AnyFunSuite {
     // keyed by text_hash, texts by doc_id) and vacuum the append-only band
     // store (its live manifest references every file -> no data loss)
     val before = stores() match { case (h, sg, tx) =>
-      (h.as[String].collect().toSet,
+      (h.select("text_hash").as[String].collect().toSet,
         sg.as[(Long, Long)].collect().toSet,
         tx.as[(Long, String)].collect().toSet) }
     Pipeline.maintain(spark, hashDir, keyCol = "text_hash", olderThanMs = 0)
     Pipeline.maintain(spark, textDir, olderThanMs = 0)
     SnapshotTable.vacuum(spark, sigDir, keepLast = 1, olderThanMs = 0)
     assert(stores() match { case (h, sg, tx) =>
-      h.as[String].collect().toSet == before._1 &&
+      h.select("text_hash").as[String].collect().toSet == before._1 &&
         sg.as[(Long, Long)].collect().toSet == before._2 &&
         tx.as[(Long, String)].collect().toSet == before._3 })
 

@@ -7,12 +7,23 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Span
 import graft.gen.{SpanGen, Synth}
+import graft.spark.SparkTestSession.drain
 
 object SparkTestSession {
   lazy val spark: SparkSession = {
     val s = Sessions.builder(4, "graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Waits for an AvailableNow query to end on its own, and stops it
+    * either way, so no query outlives its test.
+    */
+  def drain(q: StreamingQuery): Unit = {
+    import org.scalatest.Assertions.assert
+    try assert(q.awaitTermination(120000), "the AvailableNow query did not terminate")
+    finally q.stop()
+    assert(!q.isActive)
   }
 }
 
@@ -204,15 +215,6 @@ class PipelineSpec extends AnyFunSuite {
     val written = spark.read.parquet(tmp)
     assert(written.filter(col("error").isNotNull).count() == 1)
     assert(written.count() == 21)
-  }
-
-  /** Waits for an AvailableNow query to end on its own, and stops it
-    * either way, so no query outlives its test.
-    */
-  private def drain(q: StreamingQuery): Unit = {
-    try assert(q.awaitTermination(120000), "the AvailableNow query did not terminate")
-    finally q.stop()
-    assert(!q.isActive)
   }
 
   private def committed(outDir: String) = SnapshotTable.read(spark, outDir).get

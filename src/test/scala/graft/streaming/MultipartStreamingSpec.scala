@@ -81,7 +81,7 @@ class MultipartStreamingSpec extends AnyFunSuite {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(120000)
+    SparkTestSession.drain(q)
 
     val out = spark.table("mp_assembled")
     assert(out.count() == 20) // one row per doc, emitted exactly once
@@ -296,7 +296,7 @@ class MultipartStreamingSpec extends AnyFunSuite {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(120000)
+    SparkTestSession.drain(q)
 
     val out = spark.table("wm_metrics")
       .select("window_start", "format", "n_extracted", "n_errored")

@@ -57,7 +57,7 @@ class StreamingSessionizeSpec extends AnyFunSuite {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination(120000)
+    SparkTestSession.drain(q)
 
     val got = spark.table("sess_stream")
       .as[(Long, Long, Long, Long)].collect().toSet

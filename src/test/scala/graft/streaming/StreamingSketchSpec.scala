@@ -1,15 +1,14 @@
 package graft.streaming
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Sketch
-import graft.spark.SparkTestSession
+import graft.spark.{SnapshotTable, SparkTestSession}
 
 /** Continuous KMV distinct accounting: per-batch sketches accumulate in
-  * the store and the read-side merge equals one batch sketch over the full
-  * history; replays rewrite their own partition with identical content.
+  * the store table and the read-side merge equals one batch sketch over
+  * the full history; a replayed sketch commits nothing.
   * The batch form of the merge (kmvMerge) is oracle-gated as q104; these
   * tests pin the cross-micro-batch and restart behavior the oracle can't
   * see.
@@ -33,7 +32,7 @@ class StreamingSketchSpec extends AnyFunSuite {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(inDir)
     val q = StreamingSketch.distinctIngest(stream, store, cp, k = 8)
-    q.processAllAvailable(); q.stop()
+    try q.processAllAvailable() finally q.stop()
 
     val got = StreamingSketch.readDistinct(spark, store, k = 8)
       .as[(Long, Long, Long)].head()
@@ -44,23 +43,24 @@ class StreamingSketchSpec extends AnyFunSuite {
     assert(got._1 == 8L) // saturated
 
     // a fresh-checkpoint rerun over the same input replays the same batch
-    // content: same content-keyed partitions, identical store afterwards
-    val partsBefore = new java.io.File(store).list().sorted.toSeq
+    // content: the same sketches, so the store commits nothing
+    val history = SnapshotTable.history(spark, store)
+    assert(history.size == 2)
     val q2 = StreamingSketch.distinctIngest(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(inDir),
       store, s"$tmp/cp2", k = 8)
-    q2.processAllAvailable(); q2.stop()
-    assert(new java.io.File(store).list().sorted.toSeq == partsBefore)
+    try q2.processAllAvailable() finally q2.stop()
+    assert(new java.io.File(s"$tmp/cp2/commits/1").exists()) // both batches ran again
+    assert(SnapshotTable.history(spark, store) == history)
     assert(StreamingSketch.readDistinct(spark, store, k = 8)
       .as[(Long, Long, Long)].head() == want)
   }
 
-  test("fresh-checkpoint runs over batches that differ only in a null value land in different partitions") {
+  test("a fresh-checkpoint batch that differs only in a null value commits no new sketch") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-sketchnull").toString
     val store = s"$tmp/store"
-    // two one-batch runs, each on its own checkpoint, so both are batch 0:
-    // only the content key can tell them apart
+    // two one-batch runs, each on its own checkpoint, so both are batch 0
     def ingest(name: String, rows: Seq[(Long, String)]): Unit = {
       val inDir = s"$tmp/in-$name"
       rows.toDF("doc_id", "text").coalesce(1).write.parquet(inDir)
@@ -71,8 +71,13 @@ class StreamingSketchSpec extends AnyFunSuite {
     }
     ingest("a", Seq((1L, "alpha"), (2L, "beta")))
     ingest("b", Seq((1L, "alpha"), (2L, "beta"), (3L, null)))
-    val parts = new java.io.File(store).list().filter(_.startsWith("batch=")).sorted.toSeq
-    assert(parts.size == 2 && parts.forall(_.startsWith("batch=0-")), parts)
+    // a null has no hash: both batches have one sketch, committed once,
+    // and the estimate counts the two non-null values
+    assert(new java.io.File(s"$tmp/cp-b/commits/0").exists())
+    assert(SnapshotTable.history(spark, store).size == 1)
+    assert(SnapshotTable.committedRows(spark, store) == 1)
+    assert(StreamingSketch.readDistinct(spark, store, k = 8)
+      .as[(Long, Long, Long)].head() == ((2L, -1L, 2L)))
   }
 
   test("missing store reads as zero distinct") {
