@@ -753,7 +753,7 @@ object SparkEntry {
     // large-x-large ANN join: every 7th vector joined to its top-3
     // approximate neighbors in the full table — sign both sides with the
     // q31 md5 planes, multiprobe the left to hamming<=2, ONE signature
-    // equi-join, bounded TopKAgg per left id (no window, no driver collect)
+    // equi-join, bounded collectTopK per left id (no window, no driver collect)
     "q57_knn_join" -> ((s, dir) => {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       Similarity.knnJoin(emb.filter(col("vec_id") % 7 === 0), emb)
@@ -1152,9 +1152,9 @@ object SparkEntry {
 
     // inverted-index shard: per-term df / total_tf and a gap-encoded
     // posting list over the 16 smallest doc ids; the hot-term posting
-    // buffer is bounded BY CONSTRUCTION (IndexBuild.PostingsAgg) on every
-    // map task before the term shuffle — exact df/total_tf ride the same
-    // buffer as counters and feed the truncated flag
+    // buffer is bounded BY CONSTRUCTION (collectTopK) on every map task
+    // before the term shuffle — exact df/total_tf ride the same
+    // aggregation as a count and a sum and feed the truncated flag
     "q112_inverted_index" -> ((s, dir) =>
       IndexBuild.invertedIndex(
         s.read.parquet(s"$dir/documents.parquet"), maxPostings = 16)

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftColumnBridge.collectTopK
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Inverted-index shard construction: term -> (document frequency, total
@@ -10,12 +11,12 @@ import org.apache.spark.sql.functions._
   * retrieval over the corpus, dedup forensics, quality auditing).
   *
   * Scale shape: ONE `groupBy(term, doc_id)` with map-side partials computes
-  * per-doc term frequencies, then ONE `groupBy(term)` whose aggregation
-  * buffer is bounded at `maxPostings` entries BY CONSTRUCTION
-  * ([[PostingsAgg]] — the [[TopKAgg]] argument: a stopword appearing in
-  * every document of a 100-TB corpus reduces to `maxPostings` postings on
-  * every map task before anything shuffles, while its exact df/total_tf
-  * ride the same buffer as two counters). No window, no corpus-sized sort,
+  * per-doc term frequencies, then ONE `groupBy(term)` whose posting buffer
+  * is bounded at `maxPostings` entries BY CONSTRUCTION (`collectTopK` over
+  * (doc_id, tf): a stopword appearing in every document of a 100-TB corpus
+  * reduces to `maxPostings` postings on every map task before anything
+  * shuffles, while its exact df/total_tf ride the same aggregation as a
+  * count and a sum). No window, no corpus-sized sort,
   * no unbounded `collect_list`: the hot-term problem that kills naive index
   * builders is bounded before the Exchange.
   *
@@ -27,107 +28,29 @@ import org.apache.spark.sql.functions._
   */
 object IndexBuild {
 
-  /** [[PostingsAgg]] buffer: parallel primitive-long arrays whose live
-    * prefix is `[0, n)` (capacity may exceed `n` — amortized doubling up
-    * to `k` — and the slack serializes as garbage only on spill, where it
-    * is ignored on read because every consumer bounds itself by `n`).
-    * Unboxed arrays + in-place memmove make reduce a binary search plus
-    * one `System.arraycopy` instead of an O(k) boxed Vector rebuild per
-    * input row (quadratic-ish per group at large `maxPostings`).
-    */
-  case class PostingsBuf(ids: Array[Long], tfs: Array[Long], n: Int,
-      df: Long, tf: Long)
-
-  /** Bounded posting-list Aggregator: keeps the `k` smallest (doc_id, tf)
-    * pairs in a sorted buffer PLUS exact df / total_tf counters. Input
-    * pairs are distinct in doc_id per group (they come out of the
-    * (term, doc_id) pre-aggregation), so df is a plain count. Spark's
-    * typed-Aggregator contract allows reduce to mutate its buffer in
-    * place, which this does (the arrays are modified, the wrapper is
-    * rebuilt).
-    */
-  class PostingsAgg(k: Int)
-      extends Aggregator[(Long, Long), PostingsBuf,
-        (Seq[(Long, Long)], Long, Long)] {
-    require(k > 0, "maxPostings must be positive")
-    def zero: PostingsBuf =
-      PostingsBuf(Array.emptyLongArray, Array.emptyLongArray, 0, 0L, 0L)
-
-    def reduce(b: PostingsBuf, a: (Long, Long)): PostingsBuf = {
-      val (id, t) = a
-      if (b.n >= k && b.ids(b.n - 1) <= id) // saturated, not smaller: O(1)
-        PostingsBuf(b.ids, b.tfs, b.n, b.df + 1L, b.tf + t)
-      else {
-        // binary search for the insert position in the live prefix
-        var lo = 0; var hi = b.n
-        while (lo < hi) {
-          val mid = (lo + hi) >>> 1
-          if (b.ids(mid) < id) lo = mid + 1 else hi = mid
-        }
-        val newN = math.min(k, b.n + 1)
-        var ids = b.ids; var tfs = b.tfs
-        if (ids.length < newN) { // grow capacity: doubling, capped at k
-          val cap = math.min(k, math.max(4, ids.length * 2))
-          ids = java.util.Arrays.copyOf(ids, cap)
-          tfs = java.util.Arrays.copyOf(tfs, cap)
-        }
-        // shift right by one; the former last element falls off if full
-        System.arraycopy(ids, lo, ids, lo + 1, newN - 1 - lo)
-        System.arraycopy(tfs, lo, tfs, lo + 1, newN - 1 - lo)
-        ids(lo) = id; tfs(lo) = t
-        PostingsBuf(ids, tfs, newN, b.df + 1L, b.tf + t)
-      }
-    }
-
-    def merge(a: PostingsBuf, b: PostingsBuf): PostingsBuf = {
-      val n = math.min(k, a.n + b.n)
-      val ids = new Array[Long](n); val tfs = new Array[Long](n)
-      var i = 0; var j = 0; var o = 0
-      while (o < n) {
-        if (j >= b.n || (i < a.n && a.ids(i) <= b.ids(j))) {
-          ids(o) = a.ids(i); tfs(o) = a.tfs(i); i += 1
-        } else { ids(o) = b.ids(j); tfs(o) = b.tfs(j); j += 1 }
-        o += 1
-      }
-      PostingsBuf(ids, tfs, n, a.df + b.df, a.tf + b.tf)
-    }
-
-    def finish(r: PostingsBuf): (Seq[(Long, Long)], Long, Long) =
-      ((0 until r.n).map(i => (r.ids(i), r.tfs(i))), r.df, r.tf)
-    def bufferEncoder: Encoder[PostingsBuf] = Encoders.product[PostingsBuf]
-    def outputEncoder: Encoder[(Seq[(Long, Long)], Long, Long)] =
-      Encoders.product[(Seq[(Long, Long)], Long, Long)]
-  }
-
   /** Build the index over `docs` (doc_id numeric, text string).
     * Output: (term, df, total_tf, postings, truncated), postings =
-    * "delta:tf,..." over the `maxPostings` smallest doc ids.
+    * "delta:tf,..." over the `maxPostings` smallest doc ids. A NULL doc_id
+    * fails the query: it would rank first and break the gap chain.
     */
   def invertedIndex(docs: DataFrame, maxPostings: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
+    require(maxPostings > 0, "maxPostings must be positive")
+    val id = col("doc_id").cast("long")
     val tf = docs
-      .select(col("doc_id").cast("long").as("doc_id"),
+      .select(when(id.isNull, raise_error(lit("invertedIndex: NULL doc_id"))).otherwise(id)
+          .as("doc_id"),
         explode(TextAnalysis.words(col("text"))).as("term"))
       .groupBy("term", "doc_id")
       .agg(count(lit(1)).as("tf"))
-    val agg = new PostingsAgg(maxPostings)
-    tf.select(col("term"), col("doc_id"), col("tf"))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .mapValues(r => (r._2, r._3))
-      .agg(agg.toColumn.name("acc"))
-      .map { case (term, (postings, df, totalTf)) =>
-        val sb = new StringBuilder
-        var prev = 0L
-        postings.foreach { case (d, t) =>
-          if (sb.nonEmpty) sb.append(',')
-          sb.append(d - prev).append(':').append(t)
-          prev = d
-        }
-        (term, df, totalTf, sb.toString, if (df > maxPostings) 1 else 0)
-      }
-      .toDF("term", "df", "total_tf", "postings", "truncated")
+    // one row per (term, doc_id) in, so df is a plain count
+    tf.groupBy("term")
+      .agg(count(lit(1)).as("df"), sum(col("tf")).as("total_tf"),
+        collectTopK(struct(col("doc_id"), col("tf")), maxPostings).as("p"))
+      .select(col("term"), col("df"), col("total_tf"),
+        concat_ws(",", transform(col("p"), (x, i) => concat(
+          (x("doc_id") - when(i > 0, col("p")(i - 1)("doc_id")).otherwise(0L)).cast("string"),
+          lit(":"), x("tf").cast("string")))).as("postings"),
+        (col("df") > maxPostings).cast("int").as("truncated"))
   }
 
   /** Merge two inverted-index SHARDS built over DISJOINT doc-id sets into

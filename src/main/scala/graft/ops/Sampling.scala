@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.GraftColumnBridge.collectTopK
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -141,28 +142,22 @@ object Sampling {
     * Scale shape: the naive idiom — `row_number() OVER (PARTITION BY g
     * ORDER BY md5(id)) <= k` — sorts the ENTIRE group on one task (a
     * half-the-corpus group is one task's sort). Here each group reduces
-    * through a [[TopKAgg]] bounded heap instead: partial aggregation caps
-    * every map-side buffer at k entries and the shuffle carries at most
-    * k rows per group per map task. One shuffle total; no window, no sort.
+    * through a bounded `collectTopK` over (md5, id) instead: partial
+    * aggregation caps every map-side buffer at k entries and the shuffle
+    * carries at most k rows per group per map task. One shuffle total; no window, no sort.
     * k is assumed selection-sized (the buffer is O(k) PER GROUP PER TASK);
     * for rate-sized extraction use [[stratifiedSample]].
     *
-    * Output: (idCol, groupCol) of the kept rows.
+    * Output: (idCol, groupCol) of the kept rows. A NULL id fails the
+    * query: its NULL md5 would rank first in every group.
     */
   def exactKSample(df: DataFrame, k: Int, groupCol: String = "lang",
       idCol: String = "doc_id"): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    implicit val ord: Ordering[(String, Long)] =
-      Ordering.Tuple2(Ordering.String, Ordering.Long)
-    val topk = new TopKAgg[(String, Long)](k)
-    df.select(col(groupCol).cast("string").as("g"),
-        md5(col(idCol).cast("string")).as("h"), col(idCol).cast("long").as("id"))
-      .as[(String, String, Long)]
-      .groupByKey(_._1).mapValues(t => (t._2, t._3))
-      .agg(topk.toColumn.name("picked"))
-      .flatMap { case (g, picked) => picked.iterator.map { case (_, id) => (id, g) } }
-      .toDF(idCol, groupCol)
+    val id = col(idCol).cast("long")
+    df.select(col(groupCol).cast("string").as("g"), md5(col(idCol).cast("string")).as("h"),
+        when(id.isNull, raise_error(lit(s"exactKSample: NULL $idCol"))).otherwise(id).as("id"))
+      .groupBy("g").agg(collectTopK(struct(col("h"), col("id")), k).as("picked"))
+      .select(explode(col("picked.id")).as(idCol), col("g").as(groupCol))
   }
 
   /** Epoch-weighted deterministic upsampling — the "wiki x3.5, web x1"

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftColumnBridge.collectTopK
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -36,34 +37,56 @@ object Similarity {
     * broadcasts against ONE corpus scan; scoring runs through the
     * codegen'd `cosine_sim` expression (bit-identical to [[cosine]]), so
     * the corpus vectors are read straight from Tungsten ArrayData and
-    * never deserialize to `Seq[Float]`; the final per-query top-k is the
-    * bounded [[TopKAgg]] (map-side partial aggregation, k-entry buffers —
-    * never a corpus-sized window partition).
+    * never deserialize to `Seq[Float]`; the final per-query top-k is
+    * [[topKNeighbors]]. A NULL id or embedding fails the query
+    * ([[vectors]]).
     */
   def bruteKnn(emb: DataFrame, queryIds: Seq[Long], k: Int = 3): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val queries = emb.select(col("vec_id").cast("long").as("vec_id"),
-        col("embedding").as("_qv"))
-      .where(col("vec_id").isin(queryIds: _*))
-    val corpus = emb.select(col("vec_id").cast("long").as("neighbor_id"),
-      col("embedding").as("_nv"))
-    val scored = corpus.join(broadcast(queries),
+    val queries = queryVectors(emb, queryIds, "bruteKnn")
+      .select(col("vec_id"), col("embedding").as("_qv"))
+    val corpus = vectors(emb, "bruteKnn")
+      .select(col("vec_id").as("neighbor_id"), col("embedding").as("_nv"))
+    topKNeighbors(corpus.join(broadcast(queries),
         col("vec_id") =!= col("neighbor_id"))
       .select(col("vec_id"),
         graft.spark.VectorFunctions.cosineSim(col("_qv"), col("_nv")).as("sim"),
-        col("neighbor_id"))
-      .as[(Long, Double, Long)]
-
-    implicit val ord: Ordering[(Double, Long)] =
-      Ordering.by[(Double, Long), (Double, Long)](t => (-t._1, t._2))(
-        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
-    scored.groupByKey(_._1).mapValues(t => (t._2, t._3))
-      .agg(new TopKAgg[(Double, Long)](k).toColumn.name("nn"))
-      .flatMap { case (qid, nn) =>
-        nn.iterator.zipWithIndex.map { case ((_, nid), i) => (qid, i + 1, nid) }
-      }.toDF("vec_id", "rank", "neighbor_id")
+        col("neighbor_id")), k)
   }
+
+  /** `emb` as (vec_id cast to long, embedding), failing the query with an
+    * error that names the operator and the id when either is NULL: a NULL
+    * id never matches the self-exclusion test and would vanish silently,
+    * and a NULL embedding scores a NULL sim, which ranks first under
+    * [[topKNeighbors]]' key.
+    */
+  private def vectors(emb: DataFrame, op: String): DataFrame = {
+    val id = col("vec_id").cast("long")
+    emb.select(
+      when(id.isNull, raise_error(lit(s"$op: NULL vec_id"))).otherwise(id).as("vec_id"),
+      when(col("embedding").isNull,
+        raise_error(concat(lit(s"$op: NULL embedding for vec_id "), id.cast("string"))))
+        .otherwise(col("embedding")).as("embedding"))
+  }
+
+  /** [[vectors]] of the `queryIds` rows. The id filter runs on the raw
+    * column, below the NULL guard, so it still prunes the parquet scan.
+    */
+  private def queryVectors(emb: DataFrame, queryIds: Seq[Long], op: String): DataFrame =
+    vectors(emb.where(col("vec_id").cast("long").isin(queryIds: _*)), op)
+
+  /** Per-query top-k of `scored` (vec_id, sim, neighbor_id): (vec_id, rank,
+    * neighbor_id), rank 1..k by (sim desc, neighbor_id asc), through the
+    * bounded `collectTopK` (map-side k-entry buffers, never a corpus-sized
+    * window partition). sim stays internal: rank already encodes the
+    * order, and a raw double column would make the hash-compare against
+    * the oracle flaky.
+    */
+  private def topKNeighbors(scored: DataFrame, k: Int): DataFrame =
+    scored.groupBy("vec_id")
+      .agg(collectTopK(struct((-col("sim")).as("neg_sim"), col("neighbor_id")), k).as("nn"))
+      .select(col("vec_id"), posexplode(col("nn")))
+      .select(col("vec_id"), (col("pos") + 1).as("rank"),
+        col("col.neighbor_id").as("neighbor_id"))
 
   /** md5-derived Rademacher hyperplane component for [[lshAnn]]: ±1 from
     * bit 0 of the first hex char of md5("p:i"). Sign-random-projection LSH
@@ -95,16 +118,15 @@ object Similarity {
     val dim = emb.select(max(size(col("embedding")))).first().getInt(0)
     val hyper = Array.tabulate(planes, dim)(planeSign)
     val hB = spark.sparkContext.broadcast(hyper)
-    val typed = emb.select(col("vec_id").cast("long"), col("embedding")).as[(Long, Seq[Float])]
     // queries come straight off the id-pruned scan and are signed
     // driver-side, so the corpus-wide signature projection below runs in
     // exactly ONE job (the previous shape materialized it twice: once for
     // the query collect, once for the scan)
-    val queries = typed.where(col("vec_id").isin(queryIds: _*)).collect()
+    val queries = queryVectors(emb, queryIds, "lshAnn").as[(Long, Seq[Float])].collect()
       .map { case (id, v) => (id, signature(hyper, v), v) }
     val qB = spark.sparkContext.broadcast(queries)
 
-    typed.mapPartitions { it =>
+    val scored = vectors(emb, "lshAnn").as[(Long, Seq[Float])].mapPartitions { it =>
       val qs = qB.value
       val h = hB.value
       it.flatMap { case (id, v) =>
@@ -115,21 +137,11 @@ object Similarity {
             (qid, id, cosine(qv, v))
         }
       }
-    }.map { case (qid, nid, sim) => (qid, sim, nid) }
-      // bounded top-k per query through TopKAgg, NOT a window: a degenerate
-      // corpus (everything in one signature bucket) would make the window
-      // partition for one query corpus-sized; the aggregator's map-side
-      // buffers stay at k entries regardless. sim stays internal: rank
-      // already encodes the ordering, and a raw double column would make
-      // the hash-compare against the oracle flaky.
-      .groupByKey(_._1).mapValues(t => (t._2, t._3))
-      .agg(new TopKAgg[(Double, Long)](k)(
-        Ordering.by[(Double, Long), (Double, Long)](t => (-t._1, t._2))(
-          Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)),
-        implicitly).toColumn.name("nn"))
-      .flatMap { case (qid, nn) =>
-        nn.iterator.zipWithIndex.map { case ((_, nid), i) => (qid, i + 1, nid) }
-      }.toDF("vec_id", "rank", "neighbor_id")
+    }.toDF("vec_id", "neighbor_id", "sim")
+    // bounded top-k per query, NOT a window: a degenerate corpus (everything
+    // in one signature bucket) would make the window partition for one
+    // query corpus-sized; the map-side buffers stay at k entries regardless
+    topKNeighbors(scored, k)
   }
 
   /** IVF (inverted-file) ANN — the classic coarse-quantizer scale path:
@@ -146,7 +158,8 @@ object Similarity {
       nCentroids: Int = 16, nProbe: Int = 4, iters: Int = 5): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val typed = emb.select(col("vec_id").cast("long"), col("embedding")).as[(Long, Seq[Float])]
+    val vecs = vectors(emb, "ivfAnn")
+    val typed = vecs.as[(Long, Seq[Float])]
 
     // --- deterministic driver-side sample + seeded k-means. Per-partition
     // bounded take: no full pass over the table (each scan task stops after
@@ -199,7 +212,7 @@ object Similarity {
     // assignment pass just to find 20 rows), cells probed driver-side from
     // the same centroids. sortBy is stable, so equal distances tie to the
     // lowest cell index, exactly like `nearest`.
-    val queries = typed.where(col("vec_id").isin(queryIds: _*)).collect()
+    val queries = queryVectors(emb, queryIds, "ivfAnn").as[(Long, Seq[Float])].collect()
       .map { case (qid, qv) =>
         val qd = qv.map(_.toDouble).toArray
         val probes: Seq[Int] = centroids.indices
@@ -212,12 +225,10 @@ object Similarity {
     // probe-set membership + scoring against the broadcast query table via
     // the codegen'd `cosine_sim` (bit-identical to [[cosine]]) — the
     // vectors never deserialize to `Seq[Float]`; per-query top-k through
-    // the bounded [[TopKAgg]] (map-side k-entry buffers, never a
-    // corpus-sized window partition).
+    // [[topKNeighbors]].
     val qDf = broadcast(queries.toDF("vec_id", "_probes", "_qv"))
-    val scored = emb
-      .select(col("vec_id").cast("long").as("neighbor_id"),
-        col("embedding").as("_nv"))
+    val scored = vecs
+      .select(col("vec_id").as("neighbor_id"), col("embedding").as("_nv"))
       .withColumn("_cell",
         graft.spark.VectorFunctions.nearestCellCol(col("_nv"), centroids))
       .join(qDf, array_contains(col("_probes"), col("_cell")) &&
@@ -225,16 +236,7 @@ object Similarity {
       .select(col("vec_id"),
         graft.spark.VectorFunctions.cosineSim(col("_qv"), col("_nv")).as("sim"),
         col("neighbor_id"))
-      .as[(Long, Double, Long)]
-
-    implicit val ord: Ordering[(Double, Long)] =
-      Ordering.by[(Double, Long), (Double, Long)](t => (-t._1, t._2))(
-        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
-    scored.groupByKey(_._1).mapValues(t => (t._2, t._3))
-      .agg(new TopKAgg[(Double, Long)](k).toColumn.name("nn"))
-      .flatMap { case (qid, nn) =>
-        nn.iterator.zipWithIndex.map { case ((_, nid), i) => (qid, i + 1, nid) }
-      }.toDF("vec_id", "rank", "neighbor_id")
+    topKNeighbors(scored, k)
   }
 
   /** Symmetric per-vector int8 quantization — the standard 4x storage /
@@ -312,10 +314,10 @@ object Similarity {
     *   3. ONE equi-join on the signature brings hamming-adjacent pairs
     *      together (sort-merge/shuffled-hash on an int key; a skewed
     *      signature is an AQE-splittable join key, never a window);
-    *   4. candidates reduce per left id through a [[TopKAgg]] bounded-heap
-    *      aggregation — partial aggregation keeps every map-side buffer at
-    *      k entries, so the second shuffle carries at most k rows per left
-    *      id per map task. Nothing in the plan materializes an unbounded
+    *   4. candidates reduce per left id through the bounded
+    *      [[topKNeighbors]] — partial aggregation keeps every map-side
+    *      buffer at k entries, so the second shuffle carries at most k rows
+    *      per left id per map task. Nothing in the plan materializes an unbounded
     *      group.
     *
     * Output: (vec_id, rank, neighbor_id), rank 1..k by (sim desc, id asc);
@@ -342,12 +344,10 @@ object Similarity {
     val dim = dimRow.getInt(0)
     val hB = spark.sparkContext.broadcast(Array.tabulate(planes, dim)(planeSign))
 
-    val r = right.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Seq[Float])]
+    val r = vectors(right, "knnJoin").as[(Long, Seq[Float])]
       .map { case (id, v) => (id, signature(hB.value, v), v) }
       .toDF("r_id", "sig", "r_vec")
-    val l = left.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Seq[Float])]
+    val l = vectors(left, "knnJoin").as[(Long, Seq[Float])]
       .flatMap { case (id, v) =>
         probeSigs(signature(hB.value, v), planes, maxHamming).map(p => (id, p, v))
       }.toDF("l_id", "sig", "l_vec")
@@ -356,21 +356,10 @@ object Similarity {
     // the join emits every hamming<=maxHamming pair exactly once — no dedup.
     // Scoring via the codegen'd cosine_sim expression: pairs are ranked
     // without ever deserializing the vectors (bit-identical to cosine())
-    val scored = l.join(r, Seq("sig"))
+    topKNeighbors(l.join(r, Seq("sig"))
       .filter(col("l_id") =!= col("r_id"))
-      .select(col("l_id"),
+      .select(col("l_id").as("vec_id"),
         graft.spark.VectorFunctions.cosineSim(col("l_vec"), col("r_vec")).as("sim"),
-        col("r_id"))
-      .as[(Long, Double, Long)]
-
-    implicit val ord: Ordering[(Double, Long)] =
-      Ordering.by[(Double, Long), (Double, Long)](t => (-t._1, t._2))(
-        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
-    val topk = new TopKAgg[(Double, Long)](k)
-    scored.groupByKey(_._1).mapValues(t => (t._2, t._3))
-      .agg(topk.toColumn.name("nn"))
-      .flatMap { case (lid, nn) =>
-        nn.iterator.zipWithIndex.map { case ((_, nid), i) => (lid, i + 1, nid) }
-      }.toDF("vec_id", "rank", "neighbor_id")
+        col("r_id").as("neighbor_id")), k)
   }
 }

@@ -21,7 +21,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: one scan, map-side partial aggregation with buffers
   * bounded at k entries BY CONSTRUCTION (the same argument as
-  * [[TopKAgg]], plus distinctness inside the buffer), a one-row result.
+  * `GraftColumnBridge.collectTopK`, plus distinctness inside the buffer),
+  * a one-row result.
   * The union/intersection estimate combines two one-row sketches — O(k)
   * driver-free column work, no second corpus pass.
   */
@@ -30,10 +31,11 @@ object Sketch {
   private val TwoPow32 = 4294967296L
 
   /** Bounded k-minimum-DISTINCT-values typed [[Aggregator]]: the buffer is
-    * a sorted Seq of at most k distinct longs. Differs from [[TopKAgg]]
-    * only in dropping duplicates — KMV's estimator is defined on the set
-    * of distinct hash values, so a value seen a billion times occupies
-    * (at most) one slot.
+    * a sorted Seq of at most k distinct longs. Spark's bounded top-k
+    * (`GraftColumnBridge.collectTopK`) cannot stand in: it keeps
+    * duplicates, and KMV's estimator is defined on the set of distinct
+    * hash values, so a value seen a billion times must occupy (at most)
+    * one slot.
     */
   class KMinDistinctAgg(k: Int)(implicit enc: Encoder[Seq[Long]])
       extends Aggregator[Long, Seq[Long], Seq[Long]] {

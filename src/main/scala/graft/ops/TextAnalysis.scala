@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.collectTopK
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for training-data curation: language ID, quality
@@ -782,34 +783,28 @@ object TextAnalysis {
     * aggregate (`groupBy(term)` over one-row-per-(doc,term) — no second
     * scan, no distinct); the df join is a sort-merge on the term key (a hot
     * term is AQE-splittable); the final per-doc top-k runs through a
-    * [[TopKAgg]] bounded heap, so no task ever sorts a whole document's
+    * bounded `collectTopK`, so no task ever sorts a whole document's
     * term list — partial aggregation caps every buffer at k entries.
     *
-    * Output: (doc_id, rank, term, tf, df), rank 1..k.
+    * Output: (doc_id, rank, term, tf, df), rank 1..k. A NULL id fails the
+    * query instead of pooling every id-less document into one.
     */
   def distinctiveTerms(docs: DataFrame, k: Int = 3, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
+    val id = col(idCol).cast("long")
     val tf = docs
-      .select(col(idCol).cast("long").as("doc_id"),
+      .select(when(id.isNull, raise_error(lit(s"distinctiveTerms: NULL $idCol"))).otherwise(id)
+          .as("doc_id"),
         explode(words(col(textCol))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val docFreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    implicit val ord: Ordering[(Long, Long, String)] =
-      Ordering.by[(Long, Long, String), (Long, Long, String)](t => (-t._1, t._2, t._3))(
-        Ordering.Tuple3(Ordering.Long, Ordering.Long, Ordering.String))
-    val topk = new TopKAgg[(Long, Long, String)](k)
     tf.join(docFreq, "term")
-      .select(col("doc_id"), col("tf"), col("df"), col("term"))
-      .as[(Long, Long, Long, String)]
-      .groupByKey(_._1).mapValues(t => (t._2, t._3, t._4))
-      .agg(topk.toColumn.name("top"))
-      .flatMap { case (id, top) =>
-        top.iterator.zipWithIndex.map {
-          case ((tfv, dfv, term), i) => (id, i + 1, term, tfv, dfv)
-        }
-      }.toDF("doc_id", "rank", "term", "tf", "df")
+      .groupBy("doc_id")
+      .agg(collectTopK(struct((-col("tf")).as("neg_tf"), col("df"), col("term")), k)
+        .as("top"))
+      .select(col("doc_id"), posexplode(col("top")))
+      .select(col("doc_id"), (col("pos") + 1).as("rank"), col("col.term").as("term"),
+        (-col("col.neg_tf")).as("tf"), col("col.df").as("df"))
   }
 
   /** floor(log2(n)) for n >= 1 as exact bit-length arithmetic (no IEEE log

@@ -99,27 +99,31 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[MultipartAssembly.AssembledDoc], batchId: Long) =>
-        // both branches read the batch in one job; the batch is a scan of
-        // the stateful assembly's uncached RDD, so without the pin each
-        // branch would run the assembly again
+        // the batch is a scan of the stateful assembly's uncached RDD: the
+        // pin lets the count and both branches below share one run of it.
+        // With a timeout, Spark starts a batch every trigger interval to look
+        // for expired documents; such an idle batch has nothing to commit,
+        // so it ends at the count instead of running the whole commit body
         batch.persist()
         try {
-          val runId = s"parts-$batchId"
-          val docs = batch.toDF()
-          val complete = docs.filter(col("complete")).select(
-            col("doc_id"), col("format"), col("provider"), col("source_path"),
-            col("spans"), lit(null).cast("string").as("update_flag"),
-            lit(indexDate).as("src_mtime"))
-          // incomplete (timeout-flushed) docs: error rows, ExtractedDoc-shaped
-          val incomplete = docs.filter(!col("complete")).select(col("doc_id"), col("spans"),
-            lit(null).cast("string").as("fulltext"), lit(null).cast("string").as("acknowledgements"),
-            lit(Array.empty[String]).as("dataset"), lit(Array.empty[String]).as("facility"),
-            lit(null).cast("string").as("update_reason"), lit(indexDate).as("index_date"),
-            col("format"), lit(-1).as("part_id"),
-            concat_ws("/", lit(runId), col("doc_id")).as("lineage"),
-            concat(lit("multipart incomplete: missing parts "), to_json(col("missing"))).as("error"))
-          Pipeline.commitRun(batch.sparkSession, complete, Some(incomplete),
-            prevState, None, indexDate, runId, outDir)
+          if (batch.count() > 0) {
+            val runId = s"parts-$batchId"
+            val docs = batch.toDF()
+            val complete = docs.filter(col("complete")).select(
+              col("doc_id"), col("format"), col("provider"), col("source_path"),
+              col("spans"), lit(null).cast("string").as("update_flag"),
+              lit(indexDate).as("src_mtime"))
+            // incomplete (timeout-flushed) docs: error rows, ExtractedDoc-shaped
+            val incomplete = docs.filter(!col("complete")).select(col("doc_id"), col("spans"),
+              lit(null).cast("string").as("fulltext"), lit(null).cast("string").as("acknowledgements"),
+              lit(Array.empty[String]).as("dataset"), lit(Array.empty[String]).as("facility"),
+              lit(null).cast("string").as("update_reason"), lit(indexDate).as("index_date"),
+              col("format"), lit(-1).as("part_id"),
+              concat_ws("/", lit(runId), col("doc_id")).as("lineage"),
+              concat(lit("multipart incomplete: missing parts "), to_json(col("missing"))).as("error"))
+            Pipeline.commitRun(batch.sparkSession, complete, Some(incomplete),
+              prevState, None, indexDate, runId, outDir)
+          }
         } finally batch.unpersist()
         ()
       }

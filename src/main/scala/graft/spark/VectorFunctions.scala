@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
 
+import scala.collection.immutable.ArraySeq
+
 /** Embedding-vector kernels as NATIVE Catalyst expressions, same rationale
   * as [[TextFunctions]]: `doGenCode` emits a static call so the scoring of
   * billions of candidate pairs (near-dup verification, kNN-join ranking)
@@ -69,7 +71,8 @@ object VectorFunctions {
   def cosineSim(a: Column, b: Column): Column =
     column(CosineSimExpr(expression(a), expression(b)))
   def nearestCellCol(v: Column, centroids: Array[Array[Double]]): Column =
-    column(NearestCellExpr(expression(v), centroids))
+    column(NearestCellExpr(expression(v),
+      ArraySeq.unsafeWrapArray(centroids.map(ArraySeq.unsafeWrapArray(_)))))
 }
 
 /** cosine_sim(array<float>, array<float>) -> double. */
@@ -90,15 +93,22 @@ case class CosineSimExpr(left: Expression, right: Expression)
   * in at plan time (a run-time value, so it rides codegen's reference-object
   * mechanism, not a source literal). Keeps IVF cell assignment inside
   * WholeStageCodegen, reading the vector straight from Tungsten ArrayData.
+  * The centroids are held as `ArraySeq` wrappers, which compare by value,
+  * so two expressions over equal centroids are `semanticEquals`; the
+  * kernel reads the wrapped arrays themselves.
   */
-case class NearestCellExpr(child: Expression, centroids: Array[Array[Double]])
+case class NearestCellExpr(child: Expression, centroids: ArraySeq[ArraySeq[Double]])
     extends UnaryExpression with GraftFloatArrayUnaryInput {
   require(centroids.nonEmpty, "nearest_cell requires at least one centroid")
+  @transient private lazy val matrix: Array[Array[Double]] =
+    centroids.map(_.unsafeArray.asInstanceOf[Array[Double]]).toArray
   override def dataType: DataType = IntegerType
+  // plan strings name the input only, not every centroid value
+  override protected def stringArgs: Iterator[Any] = Iterator(child)
   override protected def nullSafeEval(input: Any): Any =
-    VectorFunctions.nearestCell(input.asInstanceOf[ArrayData], centroids)
+    VectorFunctions.nearestCell(input.asInstanceOf[ArrayData], matrix)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroids", centroids, "double[][]")
+    val ref = ctx.addReferenceObj("centroids", matrix, "double[][]")
     defineCodeGen(ctx, ev,
       c => s"graft.spark.VectorFunctions.nearestCell($c, $ref)")
   }

@@ -36,4 +36,19 @@ object GraftColumnBridge {
     column(catalyst.expressions.BloomFilterMightContain(
       catalyst.expressions.Literal(bloom, types.BinaryType),
       expression(value)))
+
+  /** `collect_top_k(child, k)`: the `k` smallest values of `child` in
+    * ascending order, one array per group (Spark's `CollectTopK` with
+    * `reverse = true`). It plans as partial plus final ObjectHashAggregate
+    * around one Exchange, every buffer bounded at `k` values, so a hot
+    * group is cut to `k` rows on each map task before anything shuffles.
+    * The order is Spark's order of `child`'s type: NULLs first, -0.0 equal
+    * to 0.0, NaN last, strings by UTF-8 bytes. Make it total by ending a
+    * struct `child` with a unique field, or ties fall by arrival order.
+    */
+  def collectTopK(child: Column, k: Int): Column = {
+    require(k > 0, "k must be positive")
+    column(new org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK(
+      expression(child), k, true, 0, 0).toAggregateExpression())
+  }
 }

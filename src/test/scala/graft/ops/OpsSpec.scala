@@ -78,6 +78,13 @@ class OpsSpec extends AnyFunSuite {
     assert(out("beta") == ((1L, 1L, "5:1", 0)))
     assert(out("gamma") == ((1L, 1L, "9:1", 0)))
     assert(out.size == 4)
+    // bounded shape: the posting buffer is a partial + final object
+    // aggregate, never a window over a term's whole posting list
+    val plan = IndexBuild.invertedIndex(docs, maxPostings = 2)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("Window"), s"window in invertedIndex plan:\n$plan")
+    assert("ObjectHashAggregate".r.findAllIn(plan).size >= 2,
+      s"expected partial+final bounded agg in invertedIndex plan:\n$plan")
   }
 
   test("bm25TopK: hand-computed integer scores, rare-term dominance, miss excluded") {
@@ -117,6 +124,56 @@ class OpsSpec extends AnyFunSuite {
     val knn = Similarity.bruteKnn(emb, Seq(0L), 2)
       .orderBy("rank").select("neighbor_id").as[Long].collect()
     assert(knn.toSeq == Seq(1L, 2L))
+  }
+
+  /** 20 clean 4-d vectors plus `extra`, as (vec_id, embedding). */
+  private def vecsWith(extra: (Option[Long], Option[Seq[Float]])) = {
+    import spark.implicits._
+    ((0L until 20L).map(i =>
+      (Option(i), Option((0 until 4).map(d => math.sin(i * 7.0 + d).toFloat)))) :+ extra)
+      .toDF("vec_id", "embedding")
+  }
+  private val nullId = (None, Some(Seq(1f, 1f, 1f, 1f)))
+  private val nullEmb = (Some(20L), None)
+
+  /** The messages along the cause chain of what `f` throws (a task failure
+    * reaches the driver wrapped). */
+  private def failure(f: => Any): String = {
+    val e = intercept[Exception](f)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+  }
+
+  test("bruteKnn: a NULL vec_id or embedding fails the query, naming the id") {
+    assert(failure(Similarity.bruteKnn(vecsWith(nullId), Seq(0L)).collect())
+      .contains("bruteKnn: NULL vec_id"))
+    assert(failure(Similarity.bruteKnn(vecsWith(nullEmb), Seq(0L)).collect())
+      .contains("bruteKnn: NULL embedding for vec_id 20"))
+  }
+
+  test("ivfAnn: a NULL vec_id or embedding fails the query, naming the id") {
+    def ivf(emb: org.apache.spark.sql.DataFrame) =
+      Similarity.ivfAnn(emb, Seq(0L), nCentroids = 2, nProbe = 2).collect()
+    assert(failure(ivf(vecsWith(nullId))).contains("ivfAnn: NULL vec_id"))
+    assert(failure(ivf(vecsWith(nullEmb))).contains("ivfAnn: NULL embedding for vec_id 20"))
+  }
+
+  test("lshAnn: a NULL vec_id or embedding fails the query, naming the id") {
+    assert(failure(Similarity.lshAnn(vecsWith(nullId), Seq(0L), planes = 2).collect())
+      .contains("lshAnn: NULL vec_id"))
+    assert(failure(Similarity.lshAnn(vecsWith(nullEmb), Seq(0L), planes = 2).collect())
+      .contains("lshAnn: NULL embedding for vec_id 20"))
+  }
+
+  test("knnJoin: a NULL vec_id or embedding on either side fails the query, naming the id") {
+    val clean = vecsWith(nullId).filter(col("vec_id").isNotNull)
+    for ((bad, msg) <- Seq(nullId -> "knnJoin: NULL vec_id",
+        nullEmb -> "knnJoin: NULL embedding for vec_id 20")) {
+      assert(failure(Similarity.knnJoin(vecsWith(bad), clean, planes = 2).collect())
+        .contains(msg), s"left $msg")
+      assert(failure(Similarity.knnJoin(clean, vecsWith(bad), planes = 2).collect())
+        .contains(msg), s"right $msg")
+    }
   }
 
   test("ivf ann: full probe is exact; partial probe keeps high recall") {
@@ -901,6 +958,18 @@ class OpsSpec extends AnyFunSuite {
     assert(out(2L) == Seq("common", "beta", "alpha"))
     val plan = TextAnalysis.distinctiveTerms(docs).queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), s"window in distinctiveTerms plan:\n$plan")
+  }
+
+  test("invertedIndex, exactKSample, distinctiveTerms: a NULL doc_id fails the query") {
+    import spark.implicits._
+    // a NULL id would rank first in each bounded top-k key
+    val docs = Seq((Option(1L), "alpha beta"), (None, "alpha gamma")).toDF("doc_id", "text")
+    assert(failure(IndexBuild.invertedIndex(docs, 2).collect())
+      .contains("invertedIndex: NULL doc_id"))
+    assert(failure(Sampling.exactKSample(docs.withColumn("lang", lit("en")), 1).collect())
+      .contains("exactKSample: NULL doc_id"))
+    assert(failure(TextAnalysis.distinctiveTerms(docs).collect())
+      .contains("distinctiveTerms: NULL doc_id"))
   }
 
   test("renderInterleaved: sentinel at media positions, order kept, map-only plan") {

@@ -98,6 +98,19 @@ class TextFunctionsSpec extends AnyFunSuite {
     }
   }
 
+  test("nearest_cell: expressions over equal centroids are semanticEquals") {
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    val v = column(AttributeReference("v", ArrayType(FloatType))())
+    val cs = Array(Array(1.0, 2.0), Array(-0.5, 4.0))
+    def cell(c: Array[Array[Double]]) = expression(VectorFunctions.nearestCellCol(v, c))
+    // equal values in different arrays: the same expression
+    assert(cell(cs).semanticEquals(cell(cs.map(_.clone))))
+    assert(cell(cs).semanticHash() == cell(cs.map(_.clone)).semanticHash())
+    assert(!cell(cs).semanticEquals(cell(Array(Array(1.0, 2.0), Array(-0.5, 4.5)))))
+  }
+
   test("wordsOf: byte-identical to the interpreted filter(split) HOF it replaced") {
     import spark.implicits._
     val cases = Seq(

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Dispatcher, Doc}
@@ -144,9 +144,10 @@ class MultipartStreamingSpec extends AnyFunSuite {
     * committed rows and `done` holds, then until one more batch has gone
     * through the checkpoint (so the batch that committed them has written
     * its sidecar row too), and is then stopped, all within a deadline.
+    * Returns the stopped query.
     */
   private def runPartsUntil(inDir: String, outDir: String, cpDir: String, rows: Long)(
-      done: => Boolean = true): Unit = {
+      done: StreamingQuery => Boolean = _ => true): StreamingQuery = {
     val prev = graft.gen.SpanGen.prevState(spark, dir).limit(0) // all NOT_EXTRACTED_BEFORE
     val q = StreamingPipeline.runParts(spark, inDir, outDir, cpDir, prev, ts,
       incompleteTimeoutMs = Some(1L),
@@ -162,11 +163,12 @@ class MultipartStreamingSpec extends AnyFunSuite {
     def lastCommit = Option(new java.io.File(s"$cpDir/commits").list()).toSeq.flatten
       .filter(_.forall(_.isDigit)).map(_.toInt).maxOption.getOrElse(-1)
     try {
-      await(s"$rows rows committed")(SnapshotTable.committedRows(spark, outDir) >= rows && done)
+      await(s"$rows rows committed")(SnapshotTable.committedRows(spark, outDir) >= rows && done(q))
       val last = lastCommit
       await("one more batch checkpointed")(lastCommit > last)
     } finally q.stop()
     assert(!q.isActive)
+    q
   }
 
   /** doc_id -> the snapshot that first committed it. */
@@ -245,7 +247,7 @@ class MultipartStreamingSpec extends AnyFunSuite {
       .collect { case (f, n) if n.nonEmpty && n.forall(_.isDigit) => (f, n.toInt) }
     batchFiles("commits").foreach { case (f, n) => if (n >= b) f.delete() }
     batchFiles("offsets").foreach { case (f, n) => if (n > b) f.delete() }
-    runPartsUntil(inDir, outDir, cpDir, rows = 21) {
+    runPartsUntil(inDir, outDir, cpDir, rows = 21) { _ =>
       new java.io.File(s"$cpDir/commits/${b + 1}").exists()
     }
 
@@ -258,6 +260,55 @@ class MultipartStreamingSpec extends AnyFunSuite {
     val current = SnapshotTable.readCurrent(spark, outDir).get.filter(col("doc_id") === stuckId)
       .select("error").as[String].collect()
     assert(current.length == 1 && current.head.contains("multipart incomplete"))
+  }
+
+  test("runParts: an idle batch after the drain runs no write command") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.command.DataWritingCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-partsidle").toString
+    val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val cpDir = s"$tmp/cp"
+    val sentinel = s"$tmp/sentinel"
+    writePartWaves(inDir)
+    // the batch ids (from the `parts-<batchId>` run id) of the write
+    // commands into outDir; the sentinel write, posted after the query
+    // stops, marks that every earlier event has been delivered
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    @volatile var sentinelSeen = false
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.logical.exists(_.isInstanceOf[DataWritingCommand])) {
+          val plan = qe.logical.toString
+          if (plan.contains(sentinel)) sentinelSeen = true
+          else if (plan.contains(outDir))
+            "parts-(\\d+)".r.findAllMatchIn(plan).foreach(m => writes.add(m.group(1).toLong))
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // batches after the last one that read input
+    def idle(q: StreamingQuery): Seq[Long] = {
+      val progress = q.recentProgress.toSeq
+      val lastInput = progress.filter(_.numInputRows > 0).map(_.batchId).maxOption.getOrElse(-1L)
+      progress.filter(p => p.batchId > lastInput && p.numInputRows == 0).map(_.batchId)
+    }
+    // registered before the query starts: the stream runs on a clone of
+    // the session, which copies the listeners it has at that moment
+    spark.listenerManager.register(listener)
+    try {
+      val q = runPartsUntil(inDir, outDir, cpDir, rows = 21)(idle(_).nonEmpty)
+      spark.range(1).write.parquet(sentinel)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!sentinelSeen) {
+        assert(System.nanoTime() < deadline, "sentinel write delivered within 30 s")
+        Thread.sleep(50)
+      }
+      val idleBatches = idle(q)
+      val written = writes.asScala.toSet
+      assert(idleBatches.nonEmpty && written.nonEmpty, s"idle $idleBatches, written $written")
+      assert(idleBatches.forall(b => !written.contains(b)),
+        s"idle batches $idleBatches ran write commands (batches $written)")
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("runParts rejects an incomplete timeout under an AvailableNow trigger") {
